@@ -1,7 +1,10 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
 
@@ -74,8 +77,9 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * cancellation surfaces as a stage-prefixed [[ArchiveException]]
     * and the destination object is never committed — the final object
     * appears only via a rename after a complete write, and staged
-    * parts are discarded with the job (best-effort: a straggler task
-    * outliving the abort can briefly recreate staging, the same
+    * parts are discarded with the job: the job is cancelled and its
+    * tasks drained before staging is deleted (a task outliving the
+    * drain's bound could still recreate staging, the same
     * residual-garbage caveat Spark's own file committers carry).
     */
   def archiveDFCancellable(df: DataFrame, destDir: String, table: String = "table",
@@ -125,7 +129,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     if (columnar(cfg.format)) return writeColumnarSingle(df, cfg, dest)
     val fmt = RowFormatter.of(cfg.format)
     val schema = df.schema
-    val nullValue = cfg.nullValue
+    // compiled once on the driver; every task deserializes its own copy
+    val writer = fmt.writer(schema, cfg.nullValue)
     // invocation-unique staging: two concurrent archives to the SAME
     // destination (trivial via archiveDFCancellable) must not
     // interleave staged parts or delete each other's staging on their
@@ -152,8 +157,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       new org.apache.spark.SerializableWritable(spark.sparkContext.hadoopConfiguration))
     cleaningStagingOnFailure(staging) {
       val stagedRdd = stage("download") {
-        val sep = fmt.separator
-        df.rdd.mapPartitionsWithIndex { (idx, it) =>
+        val sep = fmt.separator.getBytes(StandardCharsets.UTF_8)
+        df.queryExecution.toRdd.mapPartitionsWithIndex { (idx, it) =>
           // Task-commit protocol: write to an attempt-unique file, then
           // commit with a rename. Without it, speculative or zombie
           // attempts of the same partition interleave bytes in one
@@ -161,13 +166,14 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           // see. A lost rename race means an identical-bytes attempt
           // already committed (partitions format deterministically),
           // so the loser just discards its file.
-          val attemptId = Option(org.apache.spark.TaskContext.get())
-            .map(_.taskAttemptId()).getOrElse(0L)
+          val ctx = org.apache.spark.TaskContext.get()
+          val attemptId = if (ctx == null) 0L else ctx.taskAttemptId()
           val attempt = new Path(f"$staging/part-$idx%05d.attempt-$attemptId")
           val committed = new Path(f"$staging/part-$idx%05d")
           val fs = attempt.getFileSystem(bcConf.value.value)
           var any = false
-          val out = new java.io.BufferedOutputStream(fs.create(attempt, true), 1 << 20)
+          val out = fs.create(attempt, true)
+          val buf = new Utf8Buffer(1 << 20)
           try {
             // row production + formatting are chiv's download leg —
             // tag their failures at the source so the driver rethrows
@@ -175,19 +181,21 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
             // upload leg (destination-filesystem I/O)
             var done = false
             while (!done) {
-              val bytes =
-                try {
-                  if (it.hasNext) fmt.row(schema, it.next(), nullValue)
-                  else { done = true; null }
-                } catch {
-                  case e: ArchiveException => throw e
-                  case e: Exception => throw new ArchiveException("download", e)
-                }
-              if (!done) {
-                if (any && sep.nonEmpty) out.write(sep.getBytes(StandardCharsets.UTF_8))
-                out.write(bytes.getBytes(StandardCharsets.UTF_8))
-                any = true
+              // a cancelled job's tasks stop at the next row, even
+              // without an interrupt
+              if (ctx != null && ctx.isInterrupted())
+                throw new org.apache.spark.TaskKilledException("archive job cancelled")
+              try {
+                if (it.hasNext) {
+                  if (any) buf.bytes(sep)
+                  writer.write(it.next(), buf)
+                  any = true
+                } else done = true
+              } catch {
+                case e: ArchiveException => throw e
+                case e: Exception => throw new ArchiveException("download", e)
               }
+              if (done || buf.length >= (1 << 20)) { buf.writeTo(out); buf.reset() }
             }
           } finally out.close()
           // a killed task must not commit: after a job abort the driver
@@ -195,7 +203,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           // recreate it (narrows the race; full protection against
           // zombies is a committer-level guarantee Spark itself also
           // only approximates)
-          val killed = Option(org.apache.spark.TaskContext.get()).exists(_.isInterrupted())
+          val killed = ctx != null && ctx.isInterrupted()
           if (!any || killed) fs.delete(attempt, false)
           else if (!fs.rename(attempt, committed)) fs.delete(attempt, false)
           Iterator.single((idx, any))
@@ -244,35 +252,59 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         // truncated-but-plausible object at the exact key (the catch
         // below removes staging, temp object included)
         val tmp = new Path(s"$staging/_object")
-        val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
         try {
-          out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
-          var first = true
-          var i = 0
-          while (i < n) {
-            lock.synchronized {
-              while (!ready(i) && failure.isEmpty) lock.wait()
+          val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
+          try {
+            out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
+            var first = true
+            var i = 0
+            while (i < n) {
+              lock.synchronized {
+                while (!ready(i) && failure.isEmpty) lock.wait()
+              }
+              failure.foreach(throw _) // stage() unwraps the task's ArchiveException
+              val any = results(i)._2
+              if (any) {
+                if (!first && fmt.separator.nonEmpty)
+                  out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
+                val in = fs.open(new Path(f"$staging/part-$i%05d"))
+                try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
+                finally in.close()
+                first = false
+              }
+              i += 1
             }
-            failure.foreach(throw _) // stage() unwraps the task's ArchiveException
-            val any = results(i)._2
-            if (any) {
-              if (!first && fmt.separator.nonEmpty)
-                out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
-              val in = fs.open(new Path(f"$staging/part-$i%05d"))
-              try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
-              finally in.close()
-              first = false
-            }
-            i += 1
-          }
-          out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
-        } finally out.close()
-        fs.delete(target, false)
-        if (!fs.rename(tmp, target))
-          throw new IllegalStateException(s"rename $tmp -> $target failed")
+            out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
+          } finally out.close()
+          fs.delete(target, false)
+          if (!fs.rename(tmp, target))
+            throw new IllegalStateException(s"rename $tmp -> $target failed")
+        } catch {
+          case e: Throwable =>
+            // the caller deletes staging next: no task may still be
+            // writing into it (or create it again) by then
+            cancelAndDrain(fut)
+            throw e
+        }
         fs.delete(new Path(staging), true)
       }
     }
+  }
+
+  /** Cancel `fut`'s job, then block until its tasks have ended: a
+    * cancelled or failed job completes at once, while its killed tasks
+    * stop asynchronously. The cancelled job's own error is expected.
+    */
+  private def cancelAndDrain(fut: org.apache.spark.FutureAction[_]): Unit = {
+    fut.cancel()
+    try scala.concurrent.Await.ready(fut, scala.concurrent.duration.Duration.Inf)
+    catch { case _: Throwable => () }
+    val tracker = spark.sparkContext.statusTracker
+    val stages = fut.jobIds.flatMap(tracker.getJobInfo(_).toSeq.flatMap(_.stageIds.toSeq))
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (System.nanoTime() < deadline &&
+      stages.exists(tracker.getStageInfo(_).exists(_.numActiveTasks > 0)))
+      Thread.sleep(10)
   }
 
   /** Run `body`; on ANY failure best-effort delete the staging path
@@ -318,8 +350,6 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   }
 
   private def writeSharded(df: DataFrame, cfg: ArchiveConfig, dest: String): Unit = {
-    val schema = df.schema
-    val nullValue = cfg.nullValue
     // hive-style partition layout (cfg.partitionBy): supported for the
     // Spark codegen writers (parquet/orc/csv), where partition values
     // move into the directory path and downstream scans prune on them
@@ -348,11 +378,22 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
             throw new IllegalArgumentException(
               s"partitionBy is not supported for row-formatted $other shards " +
                 "(partition values live in the path, not the rows) — use parquet/orc/csv")
-          val fmt = RowFormatter.of(other)
-          val body = df.mapPartitions(
-            _.map(r => fmt.row(schema, r, nullValue).stripSuffix("\n")))(
-            org.apache.spark.sql.Encoders.STRING)
-          body.write.mode("overwrite").text(dest)
+          // one line per row (the text writer ends each line): the
+          // row's bytes minus a trailing newline, as a UTF8String
+          val writer = RowFormatter.of(other).writer(df.schema, cfg.nullValue)
+          val lines = df.queryExecution.toRdd.mapPartitions { it =>
+            val buf = new Utf8Buffer()
+            it.map { r =>
+              buf.reset()
+              writer.write(r, buf)
+              val n = if (buf.length > 0 && buf.byteAt(buf.length - 1) == '\n') buf.length - 1
+                else buf.length
+              InternalRow(UTF8String.fromBytes(buf.slice(n)))
+            }
+          }
+          GraftBridge.internalDataFrame(spark, lines,
+            StructType(Seq(StructField("value", StringType))))
+            .write.mode("overwrite").text(dest)
       }
     }
   }

@@ -1,8 +1,13 @@
 package graft.engine
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.RebaseDateTime
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 
@@ -11,11 +16,22 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
   * JSON 145–221) against the golden corpus in
   * /root/reference/testdata/postgres/.
   *
-  * Pure functions over (schema, row) — no Spark execution here, so
-  * they unit-test without a session and run inside any partition
-  * iterator. Typed rendering replaces the reference's bytes+regex
-  * re-parsing (chiv_formatters.go:244–276): Spark rows are already
-  * typed (SURVEY.md §1.4).
+  * The Engine formats through [[RowWriter]]s. Each built-in formatter
+  * compiles one writer per schema: key order, pre-encoded key
+  * prefixes, the null text and one cell writer per column type are
+  * decided once, and every row's UTF-8 bytes are appended straight
+  * from Spark's `InternalRow` into a reused [[Utf8Buffer]] — no
+  * external `Row`, no per-cell `String`, no second encode. Cells
+  * without a fast path (decimal, float, date, binary, nested, and
+  * timestamps outside the fast range) convert only that one cell and
+  * go through [[Render]], so their bytes are those of the value-level
+  * rules below. The public `row(schema, Row, nullValue)` entry point
+  * converts the `Row` and runs the same writer: one copy of the byte
+  * rules.
+  *
+  * [[Render]] stays the value-level helper for `Format.Custom`
+  * authors, whose formatters see external `Row`s (adapted at the edge
+  * by [[RowFormatter.writer]]).
   */
 object Render {
 
@@ -46,9 +62,43 @@ object Render {
   private def num(d: Double): String =
     if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
 
+  /** [[scalar]]'s double rule, appended without a String when whole. */
+  private[engine] def double(d: Double, out: Utf8Buffer): Unit = {
+    val l = d.toLong
+    if (l.toDouble == d && math.abs(d) < 1e15) out.long(l)
+    else out.string(java.lang.Double.toString(d))
+  }
+
   private def ts(i: Instant): String = {
     val utc = i.atZone(ZoneOffset.UTC)
     if (i.getNano == 0) tsFmt.format(utc) else tsFracFmt.format(utc)
+  }
+
+  /** [[scalar]]'s timestamp text straight from epoch micros (UTC,
+    * proleptic Gregorian): `yyyy-MM-ddTHH:mm:ssZ`, with `.SSSSSS`
+    * only for a non-zero fraction. Years 1–9999 only; callers fall
+    * back to [[scalar]] outside them (the formatter prints a `+`
+    * above 9999 and the year of era below 1).
+    */
+  private[engine] def timestamp(micros: Long, out: Utf8Buffer): Unit = {
+    val secs = Math.floorDiv(micros, 1000000L)
+    val frac = Math.floorMod(micros, 1000000L).toInt
+    val sod = Math.floorMod(secs, 86400L).toInt
+    // civil-from-days (H. Hinnant): era-relative day → (y, m, d)
+    val z = Math.floorDiv(secs, 86400L) + 719468L
+    val era = Math.floorDiv(z, 146097L)
+    val doe = (z - era * 146097L).toInt
+    val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
+    val doy = doe - (365 * yoe + yoe / 4 - yoe / 100)
+    val mp = (5 * doy + 2) / 153
+    val day = doy - (153 * mp + 2) / 5 + 1
+    val month = if (mp < 10) mp + 3 else mp - 9
+    val year = (yoe + era * 400L + (if (month <= 2) 1 else 0)).toInt
+    out.padded(year, 4); out.byte('-'); out.padded(month, 2); out.byte('-')
+    out.padded(day, 2); out.byte('T'); out.padded(sod / 3600, 2); out.byte(':')
+    out.padded(sod / 60 % 60, 2); out.byte(':'); out.padded(sod % 60, 2)
+    if (frac != 0) { out.byte('.'); out.padded(frac, 6) }
+    out.byte('Z')
   }
 
   /** Null overlay (chiv.go:175–181): placeholder replaces NULL in any
@@ -56,6 +106,79 @@ object Render {
     */
   def cell(v: Any, nullValue: Option[String]): Option[String] =
     scalar(v).orElse(nullValue)
+}
+
+/** A growable byte buffer that [[RowWriter]]s append UTF-8 into.
+  * Reused across rows: `reset()` keeps the capacity.
+  */
+final class Utf8Buffer(initialCapacity: Int = 1 << 12) {
+  private var buf = new Array[Byte](initialCapacity)
+  private var len = 0
+
+  def length: Int = len
+  def reset(): Unit = len = 0
+  def byteAt(i: Int): Byte = buf(i)
+  /** A copy of the first `n` bytes. */
+  def slice(n: Int): Array[Byte] = java.util.Arrays.copyOf(buf, n)
+  def writeTo(out: java.io.OutputStream): Unit = out.write(buf, 0, len)
+  override def toString: String = new String(buf, 0, len, UTF_8)
+
+  private def reserve(n: Int): Unit =
+    if (len + n > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + n))
+
+  def byte(b: Int): Unit = {
+    reserve(1)
+    buf(len) = b.toByte
+    len += 1
+  }
+
+  def bytes(a: Array[Byte]): Unit = {
+    reserve(a.length)
+    System.arraycopy(a, 0, buf, len, a.length)
+    len += a.length
+  }
+
+  def utf8(s: UTF8String): Unit = {
+    val n = s.numBytes
+    reserve(n)
+    s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
+    len += n
+  }
+
+  def string(s: String): Unit = bytes(s.getBytes(UTF_8))
+
+  /** Decimal digits of `v`, as `v.toString` spells them. */
+  def long(v: Long): Unit =
+    if (v == Long.MinValue) string(v.toString)
+    else {
+      var x = math.abs(v)
+      var n = 1
+      var p = 10L
+      while (n < 19 && x >= p) { n += 1; p *= 10 }
+      if (v < 0) byte('-')
+      reserve(n)
+      var i = len + n - 1
+      while (i >= len) { buf(i) = ('0' + x % 10).toByte; x /= 10; i -= 1 }
+      len += n
+    }
+
+  /** Non-negative `v` left-padded with zeros to `width` digits. */
+  def padded(v: Int, width: Int): Unit = {
+    reserve(width)
+    var x = v
+    var i = len + width - 1
+    while (i >= len) { buf(i) = ('0' + x % 10).toByte; x /= 10; i -= 1 }
+    len += width
+  }
+}
+
+/** One schema's compiled row writer: appends one row's bytes. Not
+  * thread-safe (a writer may memoize); the Engine ships one copy to
+  * each task.
+  */
+trait RowWriter extends Serializable {
+  def write(row: InternalRow, out: Utf8Buffer): Unit
 }
 
 /** Formatter SPI (reference `Formatter`: Open/Format/Close,
@@ -74,56 +197,269 @@ trait RowFormatter extends Serializable {
   def row(schema: StructType, r: Row, nullValue: Option[String]): String
   def separator: String
   def close: String
+
+  /** The writer the Engine formats rows with, compiled once per
+    * schema. This default adapts [[row]] at the edge — each
+    * `InternalRow` becomes an external `Row` — so a custom formatter
+    * implements `row` only; the built-ins override it.
+    */
+  def writer(schema: StructType, nullValue: Option[String]): RowWriter = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    (r, out) => out.string(row(schema, toRow(r).asInstanceOf[Row], nullValue))
+  }
+}
+
+/** A cell writer for one non-null column value. */
+private[engine] trait Cell extends Serializable {
+  def write(row: InternalRow, ord: Int, out: Utf8Buffer): Unit
+}
+
+/** The shipped formats: per-schema compiled byte writers. A subclass
+  * fixes the cell order, the bytes around each cell, the null text and
+  * a cell writer per type; `row` is the same writer behind a
+  * `Row` → `InternalRow` conversion.
+  */
+sealed abstract class CompiledFormatter extends RowFormatter {
+
+  /** Indices of `schema`'s fields in output order. */
+  protected def order(schema: StructType): Array[Int]
+
+  /** Bytes before each cell (in output order) and after the last. */
+  protected def frame(names: Array[String]): (Array[String], String)
+
+  /** This format's quoting of a text value. */
+  protected def quote(s: String): String
+
+  /** A NULL cell's text when no placeholder is set. */
+  protected def nullLiteral: String
+
+  /** Cell writer for a string column. */
+  protected def string(): Cell
+
+  /** True when timestamps are wrapped in double quotes. */
+  protected def quotesTimestamps: Boolean
+
+  override def writer(schema: StructType, nullValue: Option[String]): RowWriter = {
+    val ords = order(schema)
+    val (pre, post) = frame(ords.map(schema.fields(_).name))
+    new CompiledWriter(ords, pre.map(_.getBytes(UTF_8)), post.getBytes(UTF_8),
+      ords.map(i => cell(schema.fields(i).dataType)), nullText(nullValue).getBytes(UTF_8))
+  }
+
+  private def cell(dt: DataType): Cell = dt match {
+    case BooleanType => (r, o, out) => out.bytes(if (r.getBoolean(o)) Bytes.True else Bytes.False)
+    case ByteType => (r, o, out) => out.long(r.getByte(o))
+    case ShortType => (r, o, out) => out.long(r.getShort(o))
+    case IntegerType => (r, o, out) => out.long(r.getInt(o))
+    case LongType => (r, o, out) => out.long(r.getLong(o))
+    case DoubleType => (r, o, out) => Render.double(r.getDouble(o), out)
+    case _: StringType => string()
+    // Spark rebases LTZ timestamps to the hybrid Julian calendar when
+    // it builds the external java.sql.Timestamp; that is the identity
+    // from its last calendar switch (1900-01-01 in every zone) on, so
+    // only there is the text a pure function of the micros
+    case TimestampType => timestamp(dt, RebaseDateTime.lastSwitchGregorianTs)
+    case TimestampNTZType => timestamp(dt, Bytes.MinMicros)
+    case _ => converted(dt)
+  }
+
+  private def timestamp(dt: DataType, from: Long): Cell = {
+    val slow = converted(dt)
+    val quote = quotesTimestamps
+    (r, o, out) => {
+      val us = r.getLong(o)
+      if (us < from || us >= Bytes.MaxMicros) slow.write(r, o, out)
+      else {
+        if (quote) out.byte('"')
+        Render.timestamp(us, out)
+        if (quote) out.byte('"')
+      }
+    }
+  }
+
+  private def nullText(nullValue: Option[String]): String =
+    nullValue.map(quote).getOrElse(nullLiteral)
+
+  /** [[Render]]'s text of an external value: numbers and booleans
+    * bare, everything else quoted by this format.
+    */
+  private def text(v: Any): String = v match {
+    case _: Boolean | _: Byte | _: Short | _: Int | _: Long | _: Float | _: Double |
+        _: java.math.BigDecimal => Render.scalar(v).get
+    case other => quote(Render.scalar(other).get)
+  }
+
+  /** Every cell without a fast path: convert that one value. */
+  private def converted(dt: DataType): Cell = {
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    (r, o, out) => out.string(text(toScala(r.get(o, dt))))
+  }
+
+  @transient private lazy val lastRow = new ThreadLocal[RowEntry]
+
+  final def row(schema: StructType, r: Row, nullValue: Option[String]): String = {
+    var e = lastRow.get
+    if (e == null || !((e.schema eq schema) || e.schema == schema) || e.nullValue != nullValue) {
+      e = new RowEntry(schema, nullValue, writer(schema, nullValue),
+        CatalystTypeConverters.createToCatalystConverter(schema))
+      lastRow.set(e)
+    }
+    e.buf.reset()
+    e.writer.write(e.toInternal(r).asInstanceOf[InternalRow], e.buf)
+    e.buf.toString
+  }
+}
+
+/** The last schema a thread formatted external `Row`s for. */
+private final class RowEntry(val schema: StructType, val nullValue: Option[String],
+    val writer: RowWriter, val toInternal: Any => Any) {
+  val buf = new Utf8Buffer()
+}
+
+private final class CompiledWriter(ords: Array[Int], pre: Array[Array[Byte]],
+    post: Array[Byte], cells: Array[Cell], nulls: Array[Byte]) extends RowWriter {
+  def write(row: InternalRow, out: Utf8Buffer): Unit = {
+    var k = 0
+    while (k < ords.length) {
+      out.bytes(pre(k))
+      val o = ords(k)
+      if (row.isNullAt(o)) out.bytes(nulls) else cells(k).write(row, o, out)
+      k += 1
+    }
+    out.bytes(post)
+  }
+}
+
+private object Bytes {
+  val True: Array[Byte] = "true".getBytes(UTF_8)
+  val False: Array[Byte] = "false".getBytes(UTF_8)
+  /** 0001-01-01T00:00:00Z and 10000-01-01T00:00:00Z as epoch micros. */
+  val MinMicros: Long = -62135596800L * 1000000L
+  val MaxMicros: Long = 253402300800L * 1000000L
+
+  /** True when `s` holds bytes ≥ 0x80 that are not valid UTF-8: the
+    * external String decodes them to U+FFFD, so such a cell takes the
+    * String path to keep that text.
+    */
+  def invalid(s: UTF8String, ascii: Boolean): Boolean = !ascii && !s.isValid
+
+  private val hex = "0123456789abcdef".getBytes(UTF_8)
+  def hex2(out: Utf8Buffer, b: Int): Unit = { out.byte(hex(b >> 4)); out.byte(hex(b & 15)) }
 }
 
 /** Go encoding/csv semantics: comma delimiter, `\n` terminator,
   * minimal quoting (quote only fields containing `"` `,` CR LF or
   * leading space/tab), `"` escaped by doubling. Header on open.
   */
-object CsvFormatter extends RowFormatter {
+object CsvFormatter extends CompiledFormatter {
   def open(schema: StructType): String =
-    schema.fieldNames.map(quoteIfNeeded).mkString(",") + "\n"
-  def row(schema: StructType, r: Row, nullValue: Option[String]): String =
-    (0 until r.length)
-      .map(i => Render.cell(r.get(i), nullValue).fold("")(quoteIfNeeded))
-      .mkString(",") + "\n"
+    schema.fieldNames.map(quote).mkString(",") + "\n"
   val separator = ""
   val close = ""
 
-  private def quoteIfNeeded(s: String): String =
+  protected def order(schema: StructType): Array[Int] = schema.fields.indices.toArray
+  protected def frame(names: Array[String]): (Array[String], String) =
+    (names.indices.map(k => if (k == 0) "" else ",").toArray, "\n")
+  protected val nullLiteral = ""
+  protected val quotesTimestamps = false
+
+  protected def string(): Cell = (r, o, out) => {
+    val s = r.getUTF8String(o)
+    val n = s.numBytes
+    var quoted = n > 0 && (s.getByte(0) == ' ' || s.getByte(0) == '\t')
+    var ascii = true
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b == ',' || b == '"' || b == '\n' || b == '\r') quoted = true
+      else if (b < 0) ascii = false
+      i += 1
+    }
+    if (Bytes.invalid(s, ascii)) out.string(quote(s.toString))
+    else if (!quoted) out.utf8(s)
+    else {
+      out.byte('"')
+      i = 0
+      while (i < n) {
+        val b = s.getByte(i)
+        if (b == '"') out.byte('"')
+        out.byte(b)
+        i += 1
+      }
+      out.byte('"')
+    }
+  }
+
+  protected def quote(s: String): String =
     if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r') ||
       s.startsWith(" ") || s.startsWith("\t"))
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
 }
 
+/** Keys in alphabetical order (Go map marshaling order), stable for
+  * equal names.
+  */
+private object SortedKeys {
+  def apply(schema: StructType): Array[Int] =
+    schema.fields.indices.sortBy(schema.fields(_).name).toArray
+}
+
 /** One JSON array of objects with alphabetically ordered keys (Go map
   * marshaling order) and Go's HTML-escaping of `<` `>` `&`
   * (json.Marshal default) — byte-compatible with the golden corpus.
   */
-object JsonArrayFormatter extends RowFormatter {
+object JsonArrayFormatter extends CompiledFormatter {
   def open(schema: StructType): String = "["
-  def row(schema: StructType, r: Row, nullValue: Option[String]): String = {
-    val fields = schema.fields.zipWithIndex
-      .sortBy(_._1.name)
-      .map { case (f, i) =>
-        val v = r.get(i) match {
-          case null => nullValue.map(escape).getOrElse("null")
-          case b: Boolean => b.toString
-          case n @ (_: Int | _: Long | _: Short | _: Byte) => n.toString
-          case d: Double => Render.scalar(d).get
-          case fl: Float => Render.scalar(fl).get
-          case dec: java.math.BigDecimal => dec.stripTrailingZeros.toPlainString
-          case other => escape(Render.scalar(other).get)
-        }
-        "\"" + f.name + "\":" + v
-      }
-    "{" + fields.mkString(",") + "}"
-  }
   val separator = ","
   val close = "]"
 
-  private def escape(s: String): String = {
+  protected def order(schema: StructType): Array[Int] = SortedKeys(schema)
+  protected def frame(names: Array[String]): (Array[String], String) =
+    if (names.isEmpty) (Array.empty, "{}")
+    else (names.indices.map(k => (if (k == 0) "{" else ",") + "\"" + names(k) + "\":").toArray, "}")
+  protected val nullLiteral = "null"
+  protected val quotesTimestamps = true
+
+  private def escapes(b: Byte): Boolean =
+    (b >= 0 && b < ' ') || b == '"' || b == '\\' || b == '<' || b == '>' || b == '&'
+
+  protected def string(): Cell = (r, o, out) => {
+    val s = r.getUTF8String(o)
+    val n = s.numBytes
+    var plain = true
+    var ascii = true
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b < 0) ascii = false else if (escapes(b)) plain = false
+      i += 1
+    }
+    if (Bytes.invalid(s, ascii)) out.string(quote(s.toString))
+    else {
+      out.byte('"')
+      if (plain) out.utf8(s)
+      else {
+        i = 0
+        while (i < n) {
+          val b = s.getByte(i)
+          if (!escapes(b)) out.byte(b)
+          else b match {
+            case '"' => out.byte('\\'); out.byte('"')
+            case '\\' => out.byte('\\'); out.byte('\\')
+            case '\n' => out.byte('\\'); out.byte('n')
+            case '\r' => out.byte('\\'); out.byte('r')
+            case '\t' => out.byte('\\'); out.byte('t')
+            case _ => out.byte('\\'); out.byte('u'); out.byte('0'); out.byte('0'); Bytes.hex2(out, b)
+          }
+          i += 1
+        }
+      }
+      out.byte('"')
+    }
+  }
+
+  protected def quote(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {
       case '"' => sb.append("\\\"")
@@ -148,43 +484,35 @@ object JsonArrayFormatter extends RowFormatter {
   * punctuation (golden: ts_column double-quoted, json_column
   * single-quoted, plain strings bare).
   */
-object YamlFormatter extends RowFormatter {
+object YamlFormatter extends CompiledFormatter {
   def open(schema: StructType): String = ""
-  def row(schema: StructType, r: Row, nullValue: Option[String]): String = {
-    val fields = schema.fields.zipWithIndex
-      .sortBy(_._1.name)
-      .map { case (f, i) =>
-        val v = r.get(i) match {
-          case null => nullValue.map(scalarStyle).getOrElse("null")
-          case b: Boolean => b.toString
-          case n @ (_: Int | _: Long | _: Short | _: Byte) => n.toString
-          case d: Double => Render.scalar(d).get
-          case fl: Float => Render.scalar(fl).get
-          case dec: java.math.BigDecimal => dec.stripTrailingZeros.toPlainString
-          case other => scalarStyle(Render.scalar(other).get)
-        }
-        s"${f.name}: $v"
-      }
-    fields.zipWithIndex
-      .map { case (line, idx) => (if (idx == 0) "- " else "  ") + line }
-      .mkString("", "\n", "\n")
-  }
   val separator = ""
   val close = ""
+
+  protected def order(schema: StructType): Array[Int] = SortedKeys(schema)
+  protected def frame(names: Array[String]): (Array[String], String) =
+    (names.indices.map(k => (if (k == 0) "- " else "\n  ") + names(k) + ": ").toArray, "\n")
+  protected val nullLiteral = "null"
+  // every timestamp in the fast range resolves as one: double-quoted,
+  // and its text holds nothing to escape
+  protected val quotesTimestamps = true
 
   private val typedLike =
     ("^(true|false|yes|no|on|off|null|~|[-+]?[0-9]+|[-+]?(\\.inf)|\\.nan|" +
       "[-+]?[0-9]*\\.[0-9]+([eE][-+]?[0-9]+)?|" +
       "[0-9]{4}-[0-9]{2}-[0-9]{2}([Tt ][0-9:.]+([Zz]|[-+][0-9:]+)?)?)$").r
 
+  private def typed(s: String): Boolean = typedLike.matches(s.toLowerCase)
+
+  private val flowChars = "{}[]#&*!|>'\"%@`,\n\r\t"
+
   private def plainSafe(s: String): Boolean =
-    s.nonEmpty && !s.exists(c => "{}[]#&*!|>'\"%@`,\n\r\t".contains(c)) &&
+    s.nonEmpty && !s.exists(c => flowChars.contains(c)) &&
       !s.startsWith(" ") && !s.endsWith(" ") && !s.startsWith("- ") &&
       !s.contains(": ") && !s.endsWith(":")
 
-  private def scalarStyle(s: String): String =
-    if (s.exists(c => c == '\n' || c == '\r' || c == '\t' || c < ' ') ||
-      typedLike.matches(s.toLowerCase))
+  protected def quote(s: String): String =
+    if (s.exists(c => c == '\n' || c == '\r' || c == '\t' || c < ' ') || typed(s))
       // double-quoted style: the only style that represents control
       // characters faithfully (single-quoted folds raw newlines)
       "\"" + s.flatMap {
@@ -199,6 +527,94 @@ object YamlFormatter extends RowFormatter {
     else if (!plainSafe(s))
       "'" + s.replace("'", "''") + "'"
     else s
+
+  private final val Plain = 0
+  private final val SingleQuoted = 1
+  private final val DoubleQuoted = 2
+  private final val ViaString = 3
+  private val flowMask: Array[Boolean] = Array.tabulate(128)(c => flowChars.contains(c.toChar))
+
+  protected def string(): Cell = new YamlStringCell
+
+  /** [[quote]] over a string's bytes. Only the typed-looking
+    * test needs the decoded text; it is memoized per task for short
+    * strings (the key is cloned: scan rows reuse their buffers).
+    */
+  private final class YamlStringCell extends Cell {
+    @transient private lazy val memo = new java.util.HashMap[UTF8String, java.lang.Boolean]()
+
+    private def typedBytes(s: UTF8String): Boolean = {
+      val n = s.numBytes
+      // every match is ASCII, and is at most 5 long ("false") unless
+      // it starts with a digit, sign or dot: skip the regex otherwise
+      val b0 = if (n > 0) s.getByte(0) else 0
+      if (n > 5 && !(b0 >= '0' && b0 <= '9') && b0 != '+' && b0 != '-' && b0 != '.') false
+      else if (n > 32) typed(s.toString)
+      else {
+        val hit = memo.get(s)
+        if (hit != null) hit
+        else {
+          val t = typed(s.toString)
+          if (memo.size < 4096) memo.put(s.clone(), t)
+          t
+        }
+      }
+    }
+
+    private def style(s: UTF8String): Int = {
+      val n = s.numBytes
+      var control = false
+      var flow = n == 0
+      var ascii = true
+      var i = 0
+      while (i < n) {
+        val b = s.getByte(i)
+        if (b < 0) ascii = false
+        else if (b < ' ') control = true
+        else if (flowMask(b) || (b == ':' && (i + 1 == n || s.getByte(i + 1) == ' '))) flow = true
+        i += 1
+      }
+      if (Bytes.invalid(s, ascii)) ViaString
+      else if (control || typedBytes(s)) DoubleQuoted
+      else if (flow || s.getByte(0) == ' ' || s.getByte(n - 1) == ' ' ||
+        (n > 1 && s.getByte(0) == '-' && s.getByte(1) == ' ')) SingleQuoted
+      else Plain
+    }
+
+    def write(r: InternalRow, o: Int, out: Utf8Buffer): Unit = {
+      val s = r.getUTF8String(o)
+      style(s) match {
+        case Plain => out.utf8(s)
+        case SingleQuoted =>
+          out.byte('\'')
+          var i = 0
+          while (i < s.numBytes) {
+            val b = s.getByte(i)
+            if (b == '\'') out.byte('\'')
+            out.byte(b)
+            i += 1
+          }
+          out.byte('\'')
+        case DoubleQuoted =>
+          out.byte('"')
+          var i = 0
+          while (i < s.numBytes) {
+            s.getByte(i) match {
+              case '\\' => out.byte('\\'); out.byte('\\')
+              case '"' => out.byte('\\'); out.byte('"')
+              case '\n' => out.byte('\\'); out.byte('n')
+              case '\r' => out.byte('\\'); out.byte('r')
+              case '\t' => out.byte('\\'); out.byte('t')
+              case b if b >= 0 && b < ' ' => out.byte('\\'); out.byte('x'); Bytes.hex2(out, b)
+              case b => out.byte(b)
+            }
+            i += 1
+          }
+          out.byte('"')
+        case _ => out.string(quote(s.toString))
+      }
+    }
+  }
 }
 
 object RowFormatter {

@@ -1865,9 +1865,13 @@ object Relational {
     * winner while any production-sized fact (≥ 256 MiB) takes the
     * one-scan path.
     */
-  private def cteMaterializeMinBytes(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.cteMaterializeMinBytes")
-      .map(_.toLong).getOrElse(256L << 20)
+  private def cteMaterializeMinBytes(s: org.apache.spark.sql.SparkSession): Long = {
+    val key = "spark.graft.cteMaterializeMinBytes"
+    s.conf.getOption(key).map { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"graft: $key must be a non-negative number of bytes, got '$v'"))
+    }.getOrElse(256L << 20)
+  }
 
   val q80 = QueryDef(
     "q80_min_cost_supplier",

@@ -120,6 +120,42 @@ class CancellationSpec extends SparkSpec {
     }
   }
 
+  test("a concat failure with format tasks still running cancels the job before staging goes") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set("fs.concatfault.impl", classOf[ConcatFaultFileSystem].getName)
+    val group = s"concat-fault-${java.util.UUID.randomUUID()}"
+    try {
+      val out = Files.createTempDirectory("graft-concat-fault")
+      // partition 0 formats at once, the other seven take ~2 s each on
+      // four cores: the driver's concat of part 0 fails while three
+      // tasks run and four wait. No interrupt on cancel: the tasks must
+      // notice the kill between rows.
+      val slow = org.apache.spark.sql.functions.udf { (i: Long) =>
+        if (i >= 100L) Thread.sleep(20L)
+        i
+      }
+      val df = spark.range(0, 800, 1, 8).toDF("id").withColumn("id", slow($"id"))
+      sc.setJobGroup(group, "concat fault")
+      val t0 = System.nanoTime()
+      val e = try intercept[ArchiveException] {
+        new Engine(spark).archiveDF(df, s"concatfault://$out", "fault")
+      } finally sc.clearJobGroup()
+      val waited = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage.startsWith("graft: upload:"), e.getMessage)
+      assert(waited < 10.0, s"the failed archive took ${waited}s")
+      def left = Files.list(out).toArray.map(_.toString).toSeq
+      assert(left.isEmpty, s"left behind: $left")
+      val tracker = sc.statusTracker
+      assert(tracker.getActiveJobIds().isEmpty)
+      assert(tracker.getJobIdsForGroup(group).forall(id =>
+        !tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING)))
+      // nothing comes back once the killed tasks' time would be up
+      Thread.sleep(2500)
+      assert(left.isEmpty, s"recreated: $left")
+    } finally sc.hadoopConfiguration.unset("fs.concatfault.impl")
+  }
+
   test("cancellable API completes normally when not cancelled") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-cancel").toString
@@ -132,4 +168,16 @@ class CancellationSpec extends SparkSpec {
     job.cancel() // after completion: a no-op
     assert(job.isCompleted)
   }
+}
+
+/** The local filesystem under the `concatfault:` scheme, failing every
+  * read of a staged part: only the single-object archive's driver-side
+  * concat reads staged parts, so that concat fails while the format
+  * tasks keep writing theirs.
+  */
+class ConcatFaultFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("concatfault:///")
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    if (f.getName.startsWith("part-")) throw new java.io.IOException(s"injected: cannot read $f")
+    else super.open(f, bufferSize)
 }

@@ -63,6 +63,22 @@ class ClassicPlanSpec extends SparkSpec {
       }
       assert(direct.isEmpty,
         s"gated body must not scan lineitem directly (found ${direct.size})")
+    } finally {
+      spark.conf.unset("spark.graft.cteMaterializeMinBytes")
+      // no cached `supply` plan may leak into later suites
+      spark.sharedState.cacheManager.clearCache()
+      spark.catalog.dropTempView("supply")
+    }
+  }
+
+  test("q80: a malformed cteMaterializeMinBytes names the conf key") {
+    spark.conf.set("spark.graft.cteMaterializeMinBytes", "256m")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        graft.Registry.byName("q80_min_cost_supplier").fn(spark, dir)
+      }
+      assert(e.getMessage.contains("spark.graft.cteMaterializeMinBytes") &&
+        e.getMessage.contains("256m"), e.getMessage)
     } finally spark.conf.unset("spark.graft.cteMaterializeMinBytes")
   }
 
