@@ -175,29 +175,37 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           val out = fs.create(attempt, true)
           val buf = new Utf8Buffer(1 << 20)
           try {
-            // row production + formatting are chiv's download leg —
-            // tag their failures at the source so the driver rethrows
-            // the right stage; writes to the staging file stay on the
-            // upload leg (destination-filesystem I/O)
-            var done = false
-            while (!done) {
-              // a cancelled job's tasks stop at the next row, even
-              // without an interrupt
-              if (ctx != null && ctx.isInterrupted())
-                throw new org.apache.spark.TaskKilledException("archive job cancelled")
-              try {
-                if (it.hasNext) {
-                  if (any) buf.bytes(sep)
-                  writer.write(it.next(), buf)
-                  any = true
-                } else done = true
-              } catch {
-                case e: ArchiveException => throw e
-                case e: Exception => throw new ArchiveException("download", e)
+            try {
+              // row production + formatting are chiv's download leg —
+              // tag their failures at the source so the driver rethrows
+              // the right stage; writes to the staging file stay on the
+              // upload leg (destination-filesystem I/O)
+              var done = false
+              while (!done) {
+                // a cancelled job's tasks stop at the next row, even
+                // without an interrupt
+                if (ctx != null) GraftBridge.killTaskIfInterrupted(ctx)
+                try {
+                  if (it.hasNext) {
+                    if (any) buf.bytes(sep)
+                    writer.write(it.next(), buf)
+                    any = true
+                  } else done = true
+                } catch {
+                  case e: ArchiveException => throw e
+                  case e: Exception => throw new ArchiveException("download", e)
+                }
+                if (done || buf.length >= (1 << 20)) { buf.writeTo(out); buf.reset() }
               }
-              if (done || buf.length >= (1 << 20)) { buf.writeTo(out); buf.reset() }
-            }
-          } finally out.close()
+            } finally out.close()
+          } catch {
+            case e: Throwable =>
+              // a failed or killed attempt removes its own file, after
+              // the close (which is the upload on object stores)
+              try fs.delete(attempt, false)
+              catch { case d: Exception => e.addSuppressed(d) }
+              throw e
+          }
           // a killed task must not commit: after a job abort the driver
           // deletes staging, and a straggler's late rename would
           // recreate it (narrows the race; full protection against

@@ -24,8 +24,10 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
   * external `Row`, no per-cell `String`, no second encode. Cells
   * without a fast path (decimal, float, date, binary, nested, and
   * timestamps outside the fast range) convert only that one cell and
-  * go through [[Render]], so their bytes are those of the value-level
-  * rules below. The public `row(schema, Row, nullValue)` entry point
+  * take [[Render]]'s text. Every text a format emits — string cells,
+  * converted cells, the null placeholder, CSV's header — goes through
+  * that format's one [[Text]], its quoting and escaping over UTF-8
+  * bytes. The public `row(schema, Row, nullValue)` entry point
   * converts the `Row` and runs the same writer: one copy of the byte
   * rules.
   *
@@ -173,9 +175,8 @@ final class Utf8Buffer(initialCapacity: Int = 1 << 12) {
   }
 }
 
-/** One schema's compiled row writer: appends one row's bytes. Not
-  * thread-safe (a writer may memoize); the Engine ships one copy to
-  * each task.
+/** One schema's compiled row writer: appends one row's bytes. The
+  * Engine compiles it on the driver and ships it to the tasks.
   */
 trait RowWriter extends Serializable {
   def write(row: InternalRow, out: Utf8Buffer): Unit
@@ -214,9 +215,17 @@ private[engine] trait Cell extends Serializable {
   def write(row: InternalRow, ord: Int, out: Utf8Buffer): Unit
 }
 
+/** One format's quoting and escaping of a text value, over its UTF-8
+  * bytes. Every text a format emits goes through it: string cells,
+  * the text of converted cells, the null placeholder and CSV's header.
+  */
+private[engine] trait Text extends Serializable {
+  def write(s: UTF8String, out: Utf8Buffer): Unit
+}
+
 /** The shipped formats: per-schema compiled byte writers. A subclass
   * fixes the cell order, the bytes around each cell, the null text and
-  * a cell writer per type; `row` is the same writer behind a
+  * its [[Text]] rules; `row` is the same writer behind a
   * `Row` → `InternalRow` conversion.
   */
 sealed abstract class CompiledFormatter extends RowFormatter {
@@ -227,14 +236,11 @@ sealed abstract class CompiledFormatter extends RowFormatter {
   /** Bytes before each cell (in output order) and after the last. */
   protected def frame(names: Array[String]): (Array[String], String)
 
-  /** This format's quoting of a text value. */
-  protected def quote(s: String): String
+  /** This format's text rules. */
+  protected def text: Text
 
   /** A NULL cell's text when no placeholder is set. */
   protected def nullLiteral: String
-
-  /** Cell writer for a string column. */
-  protected def string(): Cell
 
   /** True when timestamps are wrapped in double quotes. */
   protected def quotesTimestamps: Boolean
@@ -242,8 +248,12 @@ sealed abstract class CompiledFormatter extends RowFormatter {
   override def writer(schema: StructType, nullValue: Option[String]): RowWriter = {
     val ords = order(schema)
     val (pre, post) = frame(ords.map(schema.fields(_).name))
+    val nulls = nullValue match {
+      case Some(v) => val b = new Utf8Buffer(); text.write(UTF8String.fromString(v), b); b.slice(b.length)
+      case None => nullLiteral.getBytes(UTF_8)
+    }
     new CompiledWriter(ords, pre.map(_.getBytes(UTF_8)), post.getBytes(UTF_8),
-      ords.map(i => cell(schema.fields(i).dataType)), nullText(nullValue).getBytes(UTF_8))
+      ords.map(i => cell(schema.fields(i).dataType)), nulls)
   }
 
   private def cell(dt: DataType): Cell = dt match {
@@ -253,7 +263,7 @@ sealed abstract class CompiledFormatter extends RowFormatter {
     case IntegerType => (r, o, out) => out.long(r.getInt(o))
     case LongType => (r, o, out) => out.long(r.getLong(o))
     case DoubleType => (r, o, out) => Render.double(r.getDouble(o), out)
-    case _: StringType => string()
+    case _: StringType => val t = text; (r, o, out) => t.write(r.getUTF8String(o), out)
     // Spark rebases LTZ timestamps to the hybrid Julian calendar when
     // it builds the external java.sql.Timestamp; that is the identity
     // from its last calendar switch (1900-01-01 in every zone) on, so
@@ -277,43 +287,33 @@ sealed abstract class CompiledFormatter extends RowFormatter {
     }
   }
 
-  private def nullText(nullValue: Option[String]): String =
-    nullValue.map(quote).getOrElse(nullLiteral)
-
-  /** [[Render]]'s text of an external value: numbers and booleans
-    * bare, everything else quoted by this format.
+  /** Every cell without a fast path: convert that one value and take
+    * [[Render]]'s text of it — numbers bare, everything else through
+    * this format's [[Text]].
     */
-  private def text(v: Any): String = v match {
-    case _: Boolean | _: Byte | _: Short | _: Int | _: Long | _: Float | _: Double |
-        _: java.math.BigDecimal => Render.scalar(v).get
-    case other => quote(Render.scalar(other).get)
-  }
-
-  /** Every cell without a fast path: convert that one value. */
   private def converted(dt: DataType): Cell = {
     val toScala = CatalystTypeConverters.createToScalaConverter(dt)
-    (r, o, out) => out.string(text(toScala(r.get(o, dt))))
-  }
-
-  @transient private lazy val lastRow = new ThreadLocal[RowEntry]
-
-  final def row(schema: StructType, r: Row, nullValue: Option[String]): String = {
-    var e = lastRow.get
-    if (e == null || !((e.schema eq schema) || e.schema == schema) || e.nullValue != nullValue) {
-      e = new RowEntry(schema, nullValue, writer(schema, nullValue),
-        CatalystTypeConverters.createToCatalystConverter(schema))
-      lastRow.set(e)
+    (r, o, out) => toScala(r.get(o, dt)) match {
+      case v @ (_: Boolean | _: Byte | _: Short | _: Int | _: Long | _: Float | _: Double |
+          _: java.math.BigDecimal) => out.string(Render.scalar(v).get)
+      case v => text.write(UTF8String.fromString(Render.scalar(v).get), out)
     }
-    e.buf.reset()
-    e.writer.write(e.toInternal(r).asInstanceOf[InternalRow], e.buf)
-    e.buf.toString
   }
-}
 
-/** The last schema a thread formatted external `Row`s for. */
-private final class RowEntry(val schema: StructType, val nullValue: Option[String],
-    val writer: RowWriter, val toInternal: Any => Any) {
-  val buf = new Utf8Buffer()
+  /** One row through the compiled writer. The row must match `schema`
+    * exactly — each value of the external type Spark maps the field's
+    * type to (`Long` for LongType, `java.sql.Timestamp` or `Instant`
+    * for TimestampType, …) — since it is converted to Spark's internal
+    * form first; a mismatched value throws. Compiles the writer on
+    * every call: the Engine compiles once per schema through
+    * [[writer]].
+    */
+  final def row(schema: StructType, r: Row, nullValue: Option[String]): String = {
+    val b = new Utf8Buffer(256)
+    writer(schema, nullValue)
+      .write(CatalystTypeConverters.createToCatalystConverter(schema)(r).asInstanceOf[InternalRow], b)
+    b.toString
+  }
 }
 
 private final class CompiledWriter(ords: Array[Int], pre: Array[Array[Byte]],
@@ -337,11 +337,13 @@ private object Bytes {
   val MinMicros: Long = -62135596800L * 1000000L
   val MaxMicros: Long = 253402300800L * 1000000L
 
-  /** True when `s` holds bytes ≥ 0x80 that are not valid UTF-8: the
-    * external String decodes them to U+FFFD, so such a cell takes the
-    * String path to keep that text.
+  /** True when `s` holds bytes ≥ 0x80 that are not valid UTF-8. Its
+    * external String decodes them to U+FFFD, so a [[Text]] writes that
+    * String's bytes instead.
     */
   def invalid(s: UTF8String, ascii: Boolean): Boolean = !ascii && !s.isValid
+
+  def decoded(s: UTF8String): UTF8String = UTF8String.fromString(s.toString)
 
   private val hex = "0123456789abcdef".getBytes(UTF_8)
   def hex2(out: Utf8Buffer, b: Int): Unit = { out.byte(hex(b >> 4)); out.byte(hex(b & 15)) }
@@ -352,49 +354,52 @@ private object Bytes {
   * leading space/tab), `"` escaped by doubling. Header on open.
   */
 object CsvFormatter extends CompiledFormatter {
-  def open(schema: StructType): String =
-    schema.fieldNames.map(quote).mkString(",") + "\n"
+  def open(schema: StructType): String = {
+    val b = new Utf8Buffer()
+    schema.fieldNames.zipWithIndex.foreach { case (name, k) =>
+      if (k > 0) b.byte(',')
+      CsvText.write(UTF8String.fromString(name), b)
+    }
+    b.byte('\n')
+    b.toString
+  }
   val separator = ""
   val close = ""
 
   protected def order(schema: StructType): Array[Int] = schema.fields.indices.toArray
   protected def frame(names: Array[String]): (Array[String], String) =
     (names.indices.map(k => if (k == 0) "" else ",").toArray, "\n")
+  protected val text: Text = CsvText
   protected val nullLiteral = ""
   protected val quotesTimestamps = false
 
-  protected def string(): Cell = (r, o, out) => {
-    val s = r.getUTF8String(o)
-    val n = s.numBytes
-    var quoted = n > 0 && (s.getByte(0) == ' ' || s.getByte(0) == '\t')
-    var ascii = true
-    var i = 0
-    while (i < n) {
-      val b = s.getByte(i)
-      if (b == ',' || b == '"' || b == '\n' || b == '\r') quoted = true
-      else if (b < 0) ascii = false
-      i += 1
-    }
-    if (Bytes.invalid(s, ascii)) out.string(quote(s.toString))
-    else if (!quoted) out.utf8(s)
-    else {
-      out.byte('"')
-      i = 0
+  private object CsvText extends Text {
+    def write(t: UTF8String, out: Utf8Buffer): Unit = {
+      val n = t.numBytes
+      var quoted = n > 0 && (t.getByte(0) == ' ' || t.getByte(0) == '\t')
+      var ascii = true
+      var i = 0
       while (i < n) {
-        val b = s.getByte(i)
-        if (b == '"') out.byte('"')
-        out.byte(b)
+        val b = t.getByte(i)
+        if (b == ',' || b == '"' || b == '\n' || b == '\r') quoted = true
+        else if (b < 0) ascii = false
         i += 1
       }
-      out.byte('"')
+      if (Bytes.invalid(t, ascii)) write(Bytes.decoded(t), out)
+      else if (!quoted) out.utf8(t)
+      else {
+        out.byte('"')
+        i = 0
+        while (i < n) {
+          val b = t.getByte(i)
+          if (b == '"') out.byte('"')
+          out.byte(b)
+          i += 1
+        }
+        out.byte('"')
+      }
     }
   }
-
-  protected def quote(s: String): String =
-    if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r') ||
-      s.startsWith(" ") || s.startsWith("\t"))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
 }
 
 /** Keys in alphabetical order (Go map marshaling order), stable for
@@ -418,62 +423,47 @@ object JsonArrayFormatter extends CompiledFormatter {
   protected def frame(names: Array[String]): (Array[String], String) =
     if (names.isEmpty) (Array.empty, "{}")
     else (names.indices.map(k => (if (k == 0) "{" else ",") + "\"" + names(k) + "\":").toArray, "}")
+  protected val text: Text = JsonText
   protected val nullLiteral = "null"
   protected val quotesTimestamps = true
 
-  private def escapes(b: Byte): Boolean =
-    (b >= 0 && b < ' ') || b == '"' || b == '\\' || b == '<' || b == '>' || b == '&'
+  private object JsonText extends Text {
+    private def escapes(b: Byte): Boolean =
+      (b >= 0 && b < ' ') || b == '"' || b == '\\' || b == '<' || b == '>' || b == '&'
 
-  protected def string(): Cell = (r, o, out) => {
-    val s = r.getUTF8String(o)
-    val n = s.numBytes
-    var plain = true
-    var ascii = true
-    var i = 0
-    while (i < n) {
-      val b = s.getByte(i)
-      if (b < 0) ascii = false else if (escapes(b)) plain = false
-      i += 1
-    }
-    if (Bytes.invalid(s, ascii)) out.string(quote(s.toString))
-    else {
-      out.byte('"')
-      if (plain) out.utf8(s)
-      else {
-        i = 0
-        while (i < n) {
-          val b = s.getByte(i)
-          if (!escapes(b)) out.byte(b)
-          else b match {
-            case '"' => out.byte('\\'); out.byte('"')
-            case '\\' => out.byte('\\'); out.byte('\\')
-            case '\n' => out.byte('\\'); out.byte('n')
-            case '\r' => out.byte('\\'); out.byte('r')
-            case '\t' => out.byte('\\'); out.byte('t')
-            case _ => out.byte('\\'); out.byte('u'); out.byte('0'); out.byte('0'); Bytes.hex2(out, b)
-          }
-          i += 1
-        }
+    def write(t: UTF8String, out: Utf8Buffer): Unit = {
+      val n = t.numBytes
+      var plain = true
+      var ascii = true
+      var i = 0
+      while (i < n) {
+        val b = t.getByte(i)
+        if (b < 0) ascii = false else if (escapes(b)) plain = false
+        i += 1
       }
-      out.byte('"')
+      if (Bytes.invalid(t, ascii)) write(Bytes.decoded(t), out)
+      else {
+        out.byte('"')
+        if (plain) out.utf8(t)
+        else {
+          i = 0
+          while (i < n) {
+            val b = t.getByte(i)
+            if (!escapes(b)) out.byte(b)
+            else b match {
+              case '"' => out.byte('\\'); out.byte('"')
+              case '\\' => out.byte('\\'); out.byte('\\')
+              case '\n' => out.byte('\\'); out.byte('n')
+              case '\r' => out.byte('\\'); out.byte('r')
+              case '\t' => out.byte('\\'); out.byte('t')
+              case _ => out.byte('\\'); out.byte('u'); out.byte('0'); out.byte('0'); Bytes.hex2(out, b)
+            }
+            i += 1
+          }
+        }
+        out.byte('"')
+      }
     }
-  }
-
-  protected def quote(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case '<' => sb.append("\\u003c")
-      case '>' => sb.append("\\u003e")
-      case '&' => sb.append("\\u0026")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append("\"").toString
   }
 }
 
@@ -492,6 +482,7 @@ object YamlFormatter extends CompiledFormatter {
   protected def order(schema: StructType): Array[Int] = SortedKeys(schema)
   protected def frame(names: Array[String]): (Array[String], String) =
     (names.indices.map(k => (if (k == 0) "- " else "\n  ") + names(k) + ": ").toArray, "\n")
+  protected val text: Text = YamlText
   protected val nullLiteral = "null"
   // every timestamp in the fast range resolves as one: double-quoted,
   // and its text holds nothing to escape
@@ -504,115 +495,78 @@ object YamlFormatter extends CompiledFormatter {
 
   private def typed(s: String): Boolean = typedLike.matches(s.toLowerCase)
 
-  private val flowChars = "{}[]#&*!|>'\"%@`,\n\r\t"
+  private val flowMask: Array[Boolean] =
+    Array.tabulate(128)(c => "{}[]#&*!|>'\"%@`,\n\r\t".contains(c.toChar))
 
-  private def plainSafe(s: String): Boolean =
-    s.nonEmpty && !s.exists(c => flowChars.contains(c)) &&
-      !s.startsWith(" ") && !s.endsWith(" ") && !s.startsWith("- ") &&
-      !s.contains(": ") && !s.endsWith(":")
+  private val words =
+    Array("true", "false", "yes", "no", "on", "off", "null").map(_.getBytes(UTF_8))
 
-  protected def quote(s: String): String =
-    if (s.exists(c => c == '\n' || c == '\r' || c == '\t' || c < ' ') || typed(s))
-      // double-quoted style: the only style that represents control
-      // characters faithfully (single-quoted folds raw newlines)
-      "\"" + s.flatMap {
-        case '\\' => "\\\\"
-        case '"' => "\\\""
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\x${c.toInt}%02x"
-        case c => c.toString
-      } + "\""
-    else if (!plainSafe(s))
-      "'" + s.replace("'", "''") + "'"
-    else s
-
-  private final val Plain = 0
-  private final val SingleQuoted = 1
-  private final val DoubleQuoted = 2
-  private final val ViaString = 3
-  private val flowMask: Array[Boolean] = Array.tabulate(128)(c => flowChars.contains(c.toChar))
-
-  protected def string(): Cell = new YamlStringCell
-
-  /** [[quote]] over a string's bytes. Only the typed-looking
-    * test needs the decoded text; it is memoized per task for short
-    * strings (the key is cloned: scan rows reuse their buffers).
+  /** [[typed]] without the regex for most strings: a match that does
+    * not start with a digit, sign, dot or `~` is one of its words, in
+    * any case (`b | 0x20` folds only the upper-case letter onto each
+    * lower-case one; no other character lower-cases into a word).
     */
-  private final class YamlStringCell extends Cell {
-    @transient private lazy val memo = new java.util.HashMap[UTF8String, java.lang.Boolean]()
-
-    private def typedBytes(s: UTF8String): Boolean = {
-      val n = s.numBytes
-      // every match is ASCII, and is at most 5 long ("false") unless
-      // it starts with a digit, sign or dot: skip the regex otherwise
-      val b0 = if (n > 0) s.getByte(0) else 0
-      if (n > 5 && !(b0 >= '0' && b0 <= '9') && b0 != '+' && b0 != '-' && b0 != '.') false
-      else if (n > 32) typed(s.toString)
-      else {
-        val hit = memo.get(s)
-        if (hit != null) hit
-        else {
-          val t = typed(s.toString)
-          if (memo.size < 4096) memo.put(s.clone(), t)
-          t
-        }
-      }
+  private def typedBytes(s: UTF8String): Boolean = {
+    val n = s.numBytes
+    val b0 = if (n > 0) s.getByte(0) else 0
+    if ((b0 >= '0' && b0 <= '9') || b0 == '+' || b0 == '-' || b0 == '.' || b0 == '~')
+      typed(s.toString)
+    else words.exists { w =>
+      var i = 0
+      while (i < n && i < w.length && (s.getByte(i) | 0x20) == w(i)) i += 1
+      i == n && i == w.length
     }
+  }
 
-    private def style(s: UTF8String): Int = {
-      val n = s.numBytes
+  /** Double quotes when the text has control characters or resolves to
+    * another type (the only style that represents control characters
+    * faithfully: single-quoted folds raw newlines); single quotes when
+    * plain style would misread it (flow punctuation, `: `, edge
+    * spaces, a leading `- `, empty); plain otherwise.
+    */
+  private object YamlText extends Text {
+    def write(t: UTF8String, out: Utf8Buffer): Unit = {
+      val n = t.numBytes
       var control = false
       var flow = n == 0
       var ascii = true
       var i = 0
       while (i < n) {
-        val b = s.getByte(i)
+        val b = t.getByte(i)
         if (b < 0) ascii = false
         else if (b < ' ') control = true
-        else if (flowMask(b) || (b == ':' && (i + 1 == n || s.getByte(i + 1) == ' '))) flow = true
+        else if (flowMask(b) || (b == ':' && (i + 1 == n || t.getByte(i + 1) == ' '))) flow = true
         i += 1
       }
-      if (Bytes.invalid(s, ascii)) ViaString
-      else if (control || typedBytes(s)) DoubleQuoted
-      else if (flow || s.getByte(0) == ' ' || s.getByte(n - 1) == ' ' ||
-        (n > 1 && s.getByte(0) == '-' && s.getByte(1) == ' ')) SingleQuoted
-      else Plain
-    }
-
-    def write(r: InternalRow, o: Int, out: Utf8Buffer): Unit = {
-      val s = r.getUTF8String(o)
-      style(s) match {
-        case Plain => out.utf8(s)
-        case SingleQuoted =>
-          out.byte('\'')
-          var i = 0
-          while (i < s.numBytes) {
-            val b = s.getByte(i)
-            if (b == '\'') out.byte('\'')
-            out.byte(b)
-            i += 1
+      if (Bytes.invalid(t, ascii)) write(Bytes.decoded(t), out)
+      else if (control || typedBytes(t)) {
+        out.byte('"')
+        i = 0
+        while (i < n) {
+          t.getByte(i) match {
+            case '\\' => out.byte('\\'); out.byte('\\')
+            case '"' => out.byte('\\'); out.byte('"')
+            case '\n' => out.byte('\\'); out.byte('n')
+            case '\r' => out.byte('\\'); out.byte('r')
+            case '\t' => out.byte('\\'); out.byte('t')
+            case b if b >= 0 && b < ' ' => out.byte('\\'); out.byte('x'); Bytes.hex2(out, b)
+            case b => out.byte(b)
           }
-          out.byte('\'')
-        case DoubleQuoted =>
-          out.byte('"')
-          var i = 0
-          while (i < s.numBytes) {
-            s.getByte(i) match {
-              case '\\' => out.byte('\\'); out.byte('\\')
-              case '"' => out.byte('\\'); out.byte('"')
-              case '\n' => out.byte('\\'); out.byte('n')
-              case '\r' => out.byte('\\'); out.byte('r')
-              case '\t' => out.byte('\\'); out.byte('t')
-              case b if b >= 0 && b < ' ' => out.byte('\\'); out.byte('x'); Bytes.hex2(out, b)
-              case b => out.byte(b)
-            }
-            i += 1
-          }
-          out.byte('"')
-        case _ => out.string(quote(s.toString))
-      }
+          i += 1
+        }
+        out.byte('"')
+      } else if (flow || t.getByte(0) == ' ' || t.getByte(n - 1) == ' ' ||
+          (n > 1 && t.getByte(0) == '-' && t.getByte(1) == ' ')) {
+        out.byte('\'')
+        i = 0
+        while (i < n) {
+          val b = t.getByte(i)
+          if (b == '\'') out.byte('\'')
+          out.byte(b)
+          i += 1
+        }
+        out.byte('\'')
+      } else out.utf8(t)
     }
   }
 }

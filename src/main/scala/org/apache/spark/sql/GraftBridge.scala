@@ -27,6 +27,10 @@ object GraftBridge {
       s"graft: internal-row DataFrames require a classic SparkSession, got ${other.getClass.getName}")
   }
 
+  /** Throws TaskKilledException once `ctx`'s task has been killed. */
+  def killTaskIfInterrupted(ctx: org.apache.spark.TaskContext): Unit =
+    ctx.killTaskIfInterrupted()
+
   def expression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 

@@ -50,7 +50,8 @@ class FormatterKernelSpec extends SparkSpec {
         "123", "-42", "+7", "0.5", ".5", "-1.5e3", "1E10", ".inf", "-.Inf", ".NaN", "1_000",
         "2018-01-04", "2018-01-04T00:00:00Z", "2018-01-04 10:11:12.5+01:00", "2018-1-4",
         "- item", "key: value", "ends:", "a:b", " lead", "trail ", "it's", "<a&b>",
-        "0x1F", "12345678901234567890123456789012345", "+.inf", "nan", "y", "n"))
+        "0x1F", "12345678901234567890123456789012345", "+.inf", "nan", "y", "n",
+        "tRuE", "OFF", "Null", "tru", "falsey", "ON!", "Ôn", "@n", "N", "A"))
     val doubles: Gen[Double] = Gen.frequency(
       3 -> Gen.choose(-1e6, 1e6),
       2 -> Gen.choose(-1000000L, 1000000L).map(_.toDouble),
@@ -160,6 +161,24 @@ class FormatterKernelSpec extends SparkSpec {
     val legacyBytes = formats.map { case (_, legacy) =>
       legacy.row(empty, org.apache.spark.sql.Row(), None) }
     assert(formats.map(_._1.row(empty, org.apache.spark.sql.Row(), None)) == legacyBytes)
+  }
+
+  test("CSV header names take the same quoting as cells") {
+    val sch = StructType(Seq("plain", "a,b", " lead", "q\"x", "multi\nline", "é")
+      .map(StructField(_, LongType)))
+    assert(CsvFormatter.open(sch) == LegacyCsv.open(sch))
+    assert(CsvFormatter.open(sch) == "plain,\"a,b\",\" lead\",\"q\"\"x\",\"multi\nline\",é\n")
+  }
+
+  test("row() takes schema-exact rows: values are converted by the field's type") {
+    import org.apache.spark.sql.Row
+    val sch = StructType(Seq(StructField("n", LongType), StructField("t", TimestampType)))
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2020-01-02T03:04:05Z"))
+    assert(CsvFormatter.row(sch, Row(7L, ts), None) == "7,2020-01-02T03:04:05Z\n")
+    // an Int under LongType or a String under TimestampType is not
+    // dispatched on at runtime (the Row-based formatters did): it throws
+    intercept[RuntimeException](CsvFormatter.row(sch, Row(7, ts), None))
+    intercept[RuntimeException](JsonArrayFormatter.row(sch, Row(7L, "2020-01-02"), None))
   }
 
   test("custom formatters are adapted at the edge: the writer runs their row()") {
