@@ -95,20 +95,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         try promise.success(archiveDF(df, destDir, table, config))
         finally spark.sparkContext.clearJobGroup()
       } catch {
-        case e: ArchiveException => promise.failure(e)
         case e: Throwable =>
-          // preserve a stage-tagged cause if one exists anywhere in
-          // the chain (e.g. an executor-side tag inside a
-          // SparkException); "download" is only the fallback label
-          // for pre-stage plumbing failures
-          var c: Throwable = e.getCause
-          var found: ArchiveException = null
-          while (c != null && found == null) c match {
-            case ae: ArchiveException => found = ae
-            case other => c = other.getCause
-          }
-          promise.failure(
-            if (found != null) found else new ArchiveException("download", e))
+          // "download" is only the fallback label for pre-stage
+          // plumbing failures
+          promise.failure(Engine.tagged(e).getOrElse(new ArchiveException("download", e)))
       }
     }, group)
     runner.setDaemon(true)
@@ -445,17 +435,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           s"bucketed archive requires a columnar format (parquet/orc), got $other"))
     }
     stage("upload") {
-      // Re-archive must win over any previous state. DROP handles a
-      // live catalog entry (and deletes its managed location); the
-      // explicit location delete handles the ORPHAN case — a previous
-      // process wrote the table, the in-memory catalog forgot it at
-      // exit, and the warehouse directory survived, which makes
-      // saveAsTable fail with LOCATION_ALREADY_EXISTS.
-      spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-      val loc = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      resetTable(tableName)
       projected.write.format(fmt).mode("overwrite")
         .bucketBy(buckets, bucketCol)
         .sortBy(bucketCol)
@@ -487,11 +467,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           s"partitioned archive requires a columnar format (parquet/orc), got $other"))
     }
     stage("upload") {
-      spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-      val loc = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      resetTable(tableName)
       projected.write.format(fmt).mode("overwrite")
         .partitionBy(partCol)
         .saveAsTable(tableName)
@@ -542,11 +518,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val z = Engine.zOrder(
       code(df.col(colA), aMin, aSpan), code(df.col(colB), bMin, bSpan))
     stage("upload") {
-      spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-      val loc = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      resetTable(tableName)
       val w = df.withColumn("z", z)
         .repartitionByRange(rangePartitions, org.apache.spark.sql.functions.col("z"))
         .sortWithinPartitions("z")
@@ -560,21 +532,23 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
 
   private def stage[T](name: String)(body: => T): T =
     try body catch {
-      case e: ArchiveException => throw e
-      case e: Exception =>
-        // a task-side ArchiveException (e.g. a formatter failure tagged
-        // "download" on the executor) reaches the driver wrapped in a
-        // SparkException — surface it with its original stage. (If the
-        // executor's exception chain failed Java serialization, Spark
-        // drops the cause and the error keeps this stage's label — a
-        // less precise stage, never a lost error.)
-        var c: Throwable = e.getCause
-        while (c != null) c match {
-          case ae: ArchiveException => throw ae
-          case other => c = other.getCause
-        }
-        throw new ArchiveException(name, e)
+      case e: Exception => throw Engine.tagged(e).getOrElse(new ArchiveException(name, e))
     }
+
+  /** Re-archive of catalog table `tableName` must win over any previous
+    * state. DROP handles a live catalog entry (and deletes its managed
+    * location); the explicit location delete handles the ORPHAN case —
+    * a previous process wrote the table, the in-memory catalog forgot
+    * it at exit, and the warehouse directory survived, which makes
+    * saveAsTable fail with LOCATION_ALREADY_EXISTS.
+    */
+  private def resetTable(tableName: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
+    val loc = new Path(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
 
   /** Landing-verification MANIFEST (K1d): after a sharded archive
     * lands, record WHAT landed — every data file with its byte size,
@@ -732,11 +706,9 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           "refusing to compact an archive that fails its manifest audit " +
             s"(repair the findings first): ${pre.mkString("; ")}"))
     }
-    def hidden(p: Path): Boolean =
-      p.getName.startsWith("_") || p.getName.startsWith(".")
     // leaf dirs with visible data files, depth-first
     def leaves(p: Path): Seq[(Path, Seq[org.apache.hadoop.fs.FileStatus])] = {
-      val (dirs, files) = fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath))
+      val (dirs, files) = fs.listStatus(p).toSeq.filterNot(st => Engine.hidden(st.getPath))
         .partition(_.isDirectory)
       dirs.flatMap(d => leaves(d.getPath)) ++
         (if (files.nonEmpty) Seq(p -> files) else Seq.empty)
@@ -761,7 +733,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
             read(srcPaths).coalesce(nOut)
               .write.format(fmt).save(staging.toString)
             val staged = fs.listStatus(staging)
-              .filter(st => st.isFile && !hidden(st.getPath)).map(_.getPath)
+              .filter(st => st.isFile && !Engine.hidden(st.getPath)).map(_.getPath)
             val stagedRows = read(staged.toSeq).count()
             if (stagedRows != srcRows)
               throw new IllegalStateException(
@@ -1020,11 +992,9 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // a straggler task can recreate, .staging-* residue): Spark's own
     // readers skip hidden directories, so recording their contents
     // would guarantee later false "missing file" alarms
-    def hidden(p: Path): Boolean =
-      p.getName.startsWith("_") || p.getName.startsWith(".")
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
-        if (hidden(st.getPath)) Seq.empty
+        if (Engine.hidden(st.getPath)) Seq.empty
         else if (st.isDirectory) walk(st.getPath)
         else Seq(st)
       }
@@ -1124,6 +1094,25 @@ final class ArchiveJob private[engine] (
 
 object Engine {
   val ManifestName = "_MANIFEST.json"
+
+  /** The stage-tagged [[ArchiveException]] in `e`'s cause chain, `e`
+    * included: a task-side tag (e.g. a formatter failure tagged
+    * "download" on the executor) comes back from the job wrapped in a
+    * SparkException and keeps its original stage. (If the executor's
+    * exception chain failed Java serialization, Spark drops the cause
+    * and the error keeps the caller's label — a less precise stage,
+    * never a lost error.)
+    */
+  private def tagged(e: Throwable): Option[ArchiveException] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case ae: ArchiveException => ae }
+
+  /** Names starting with '_' or '.' (committer metadata, the manifest,
+    * `_temporary` and `.staging-*` residue): Spark's own readers skip
+    * them, as files and as directories.
+    */
+  private def hidden(p: Path): Boolean =
+    p.getName.startsWith("_") || p.getName.startsWith(".")
 
   /** [[Engine.vacuumStaging]]'s default grace window: comfortably
     * longer than any plausible in-flight archive, short enough that a

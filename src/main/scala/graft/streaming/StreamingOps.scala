@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface. The reference has zero streaming
   * operators (its "streaming" is an io.Pipe for backpressure,
@@ -662,6 +664,94 @@ object StreamingOps {
   def enrich(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events.join(dim, Seq(key), "left")
 
+  /** `dir`'s Hadoop FileSystem under the session's Hadoop
+    * configuration: every storage call below goes through it, so the
+    * sinks work on any scheme the session can reach (file, hdfs, s3a).
+    */
+  private def fsOf(s: SparkSession, dir: Path): FileSystem =
+    dir.getFileSystem(s.sessionState.newHadoopConf())
+
+  /** The one `foreachBatch` sink every batch-writing stream below starts
+    * through: `checkpoint` (when given) is the query's
+    * `checkpointLocation`, and `body` runs for each non-empty
+    * micro-batch with its batch id.
+    */
+  private def eachBatch[T](ds: Dataset[T], checkpoint: Option[String] = None)(
+      body: (Dataset[T], Long) => Unit): StreamingQuery =
+    checkpoint.foldLeft(ds.writeStream)((w, c) => w.option("checkpointLocation", c))
+      .foreachBatch { (batch: Dataset[T], batchId: Long) =>
+        if (!batch.isEmpty) body(batch, batchId)
+      }
+      .start()
+
+  /** The delta ledger in `dir` that [[diffStream]], [[burstStream]],
+    * [[dataCardStream]] and [[lifecycleStream]] keep, and their
+    * `*Ledger` readers fold. Every measure these ledgers hold merges
+    * additively (sum, or XOR — its own inverse), so each micro-batch
+    * lands only its own delta and the readout is a fold of all of them.
+    *
+    * - Naming: a batch's delta is `delta-<batchId>`; a stream with a
+    *   static baseline lands it ONCE as `delta-base` before it starts.
+    *   Both are written with overwrite.
+    * - Replay: foreachBatch is at-least-once. The name derives from the
+    *   batch id and the write overwrites, so a replayed batch re-writes
+    *   the same delta instead of double-counting, and a restart
+    *   re-derives an identical `delta-base`.
+    * - Restart: idempotent naming covers same-batchId replays within
+    *   one checkpointed run; a restart is consistent only if batch ids
+    *   continue. With `checkpoint` the restarted query resumes its
+    *   offsets and the prior deltas stay. Without one Spark starts
+    *   again from batch 0 with possibly different boundaries, so
+    *   [[stream]] first deletes the dead run's numeric deltas (never
+    *   `delta-base`) and the fresh run re-derives the ledger.
+    * - Readout: [[deltas]] reads every delta; a ledger with none yet
+    *   (only empty batches so far) is a valid state whose readout is
+    *   empty, not a path error.
+    */
+  private final class DeltaLedger(dir: String) {
+    private val root = new Path(dir)
+
+    private def entries(fs: FileSystem): Seq[Path] =
+      if (fs.exists(root)) fs.listStatus(root).toSeq.map(_.getPath) else Seq.empty
+
+    /** Lands `delta` as `delta-<name>` (a batch id, or `base`). */
+    def write(name: Any, delta: DataFrame): Unit =
+      delta.write.mode("overwrite").parquet(s"$dir/delta-$name")
+
+    /** Starts `ds` through [[eachBatch]], after the restart guard. */
+    def stream[T](ds: Dataset[T], checkpoint: Option[String])(
+        body: (Dataset[T], Long) => Unit): StreamingQuery = {
+      if (checkpoint.isEmpty) {
+        val fs = fsOf(ds.sparkSession, root)
+        entries(fs).filter(_.getName.matches("delta-\\d+")).foreach(fs.delete(_, true))
+      }
+      eachBatch(ds, checkpoint)(body)
+    }
+
+    /** Every delta landed so far, or no rows of `schema` (DDL) before
+      * the first one. The listed deltas are read by name: a `delta-*`
+      * glob makes Spark log a FileNotFoundException while it probes the
+      * glob as a streaming sink's metadata dir.
+      */
+    def deltas(s: SparkSession, schema: String): DataFrame =
+      entries(fsOf(s, root)).filter(_.getName.startsWith("delta-")) match {
+        case Seq() => s.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(schema))
+        case paths => s.read.parquet(paths.map(_.toString): _*)
+      }
+  }
+
+  /** True once `table` holds micro-batch `batchId`: the replay guard of
+    * the batch_id-tagged index appends. A crash between an append
+    * committing and the offset log committing makes Spark re-send the
+    * batch, and a blind append would duplicate it permanently, so a
+    * replayed id is skipped whole. The probe is a batch_id = N point
+    * filter that parquet row-group stats prune to near-zero IO at any
+    * index size.
+    */
+  private def landed(s: SparkSession, table: String, batchId: Long): Boolean =
+    s.catalog.tableExists(table) &&
+      !s.table(table).where(col("batch_id") === batchId).isEmpty
+
   /** Continuous CDC apply — q43's streaming face: maintain a parquet
     * snapshot at `snapshotDir` from a stream of changelog rows
     * (key, seq, op 'U'/'D', value). Every micro-batch is compacted to
@@ -680,36 +770,29 @@ object StreamingOps {
     * delete+rename window a concurrent reader can observe; a table
     * format with atomic commit closes it in production.)
     */
-  def applyChangelog(changes: DataFrame, snapshotDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val comp = batch.groupBy("key")
-            .agg(max_by(struct(col("op"), col("value")),
-              struct(col("seq"), col("value"), col("op"))).as("m"))
-            .select(col("key"), col("m.op").as("op"), col("m.value").as("cvalue"))
-          val hasSnap = new java.io.File(snapshotDir).exists()
-          val cur =
-            if (hasSnap) s.read.parquet(snapshotDir)
-            else batch.sparkSession.emptyDataFrame
-              .select(lit(0L).as("key"), lit(0.0).as("value")).limit(0)
-          val next = cur.join(comp, Seq("key"), "full_outer")
-            .filter(col("op").isNull || col("op") =!= "D")
-            .select(col("key"),
-              when(col("op").isNull, col("value")).otherwise(col("cvalue")).as("value"))
-          val tmp = s"$snapshotDir.tmp-$batchId"
-          next.write.mode("overwrite").parquet(tmp) // materialize FIRST
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-          }
-          if (hasSnap) rm(new java.io.File(snapshotDir))
-          if (!new java.io.File(tmp).renameTo(new java.io.File(snapshotDir)))
-            throw new IllegalStateException(s"graft: snapshot swap failed for $snapshotDir")
-          ()
-        }
-      }
-      .start()
+  def applyChangelog(changes: DataFrame, snapshotDir: String): StreamingQuery =
+    eachBatch(changes) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val comp = batch.groupBy("key")
+        .agg(max_by(struct(col("op"), col("value")),
+          struct(col("seq"), col("value"), col("op"))).as("m"))
+        .select(col("key"), col("m.op").as("op"), col("m.value").as("cvalue"))
+      val snap = new Path(snapshotDir)
+      val fs = fsOf(s, snap)
+      val hasSnap = fs.exists(snap)
+      val cur =
+        if (hasSnap) s.read.parquet(snapshotDir)
+        else s.emptyDataFrame.select(lit(0L).as("key"), lit(0.0).as("value")).limit(0)
+      val next = cur.join(comp, Seq("key"), "full_outer")
+        .filter(col("op").isNull || col("op") =!= "D")
+        .select(col("key"),
+          when(col("op").isNull, col("value")).otherwise(col("cvalue")).as("value"))
+      val tmp = new Path(s"$snapshotDir.tmp-$batchId")
+      next.write.mode("overwrite").parquet(tmp.toString) // materialize FIRST
+      if (hasSnap) fs.delete(snap, true)
+      if (!fs.rename(tmp, snap))
+        throw new IllegalStateException(s"graft: snapshot swap failed for $snapshotDir")
+    }
 
   /** q60's STREAMING face — [[applyChangelog]]'s dual: q43-apply
     * REPLAYS a kept changelog onto a snapshot; this RECOVERS one
@@ -725,90 +808,45 @@ object StreamingOps {
     * `added` when the baseline never held it. One stream-static
     * left join of the batch against the baseline classifies the
     * moves (the batch side is micro-batch-sized — AQE broadcasts
-    * it); the 4-row class delta lands as `delta-<batchId>` parquet.
-    * [[diffLedger]] folds baseline + deltas back into q60's exact
-    * output shape — a ≤(4 × batches)-row aggregate.
-    *
-    * Replay-safe under foreachBatch's AT-LEAST-ONCE contract by
-    * IDEMPOTENT NAMING rather than a processed-set probe
-    * (maintainIndex's discipline, cheaper here): the delta object's
-    * name derives from the batch id and the write is mode-overwrite,
-    * so a replayed batch re-writes the same delta instead of
-    * double-counting. The baseline's own aggregate lands ONCE as
-    * `delta-base` before the stream starts (also overwrite — a
-    * restart re-derives the identical rows).
-    *
-    * Idempotent naming covers same-batchId replays WITHIN one
-    * checkpointed run; a RESTART is only consistent if batch ids
-    * continue — so pass `checkpoint` (the q43/applyChangelog
-    * recovery contract) and the restarted query resumes offsets with
-    * prior deltas intact. Without one, Spark restarts from batch 0
-    * with possibly different batch boundaries, so setup DELETES the
-    * prior run's numeric deltas (never `delta-base`): the fresh run
-    * re-derives the full ledger rather than double-counting stale
-    * batches from a dead numbering.
+    * it); the 4-row class delta lands in the [[DeltaLedger]] at
+    * `ledgerDir`, whose naming, replay and restart contract
+    * (`checkpoint`) this stream keeps; the baseline's aggregate is its
+    * `delta-base`. [[diffLedger]] folds baseline + deltas back into
+    * q60's exact output shape — a ≤(4 × batches)-row aggregate.
     */
-  /** Clear a ledger dir's NUMERIC deltas (`delta-<batchId>`) — the
-    * un-checkpointed-restart guard both delta-ledger families
-    * (diffStream, burstStream) share: a dead run's batch numbering
-    * starts over, so its stale numeric deltas would double-count;
-    * non-numeric names (delta-base) survive.
-    */
-  private def clearNumericDeltas(ledgerDir: String): Unit = {
-    val dir = new java.io.File(ledgerDir)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("delta-\\d+"))
-      .foreach { f =>
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); ()
-        }
-        rm(f)
-      }
-  }
-
   def diffStream(newRows: DataFrame, old: DataFrame, ledgerDir: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    if (checkpoint.isEmpty) clearNumericDeltas(ledgerDir)
+      checkpoint: Option[String] = None): StreamingQuery = {
+    val ledger = new DeltaLedger(ledgerDir)
     // baseline: every old key opens in 'removed' (nothing has arrived)
-    old.groupBy()
+    ledger.write("base", old.groupBy()
       .agg(count(lit(1)).as("dn"), expr("bit_xor(key)").as("dkx"),
         sum(col("cents")).as("doc"), sum(lit(0L)).as("dnc"))
       .select(lit("removed").as("diff_class"), col("dn"), col("dkx"),
         col("doc"), col("dnc"))
-      .where(col("dn") > 0)
-      .write.mode("overwrite").parquet(s"$ledgerDir/delta-base")
-    val writer = checkpoint.foldLeft(newRows.writeStream)(
-      (w, c) => w.option("checkpointLocation", c))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val moves = batch.as("b")
-            .join(old.as("o"), col("b.key") === col("o.key"), "left_outer")
-            .select(col("b.key").as("key"), col("o.cents").as("old_cents"),
-              col("b.cents").as("new_cents"))
-            .withColumn("cls",
-              when(col("old_cents").isNull, "added")
-                .when(col("old_cents") =!= col("new_cents"), "changed")
-                .otherwise("unchanged"))
-          // +1 into the landing class; −1 out of 'removed' for keys
-          // the baseline held (XOR cancels the baseline's checksum
-          // contribution, negation cancels its cent total)
-          val pos = moves.select(col("cls").as("diff_class"), lit(1L).as("dn"),
-            col("key"), coalesce(col("old_cents"), lit(0L)).as("doc"),
-            col("new_cents").as("dnc"))
-          val neg = moves.where(col("old_cents").isNotNull)
-            .select(lit("removed").as("diff_class"), lit(-1L).as("dn"),
-              col("key"), (-col("old_cents")).as("doc"), lit(0L).as("dnc"))
-          pos.unionAll(neg)
-            .groupBy("diff_class")
-            .agg(sum("dn").as("dn"), expr("bit_xor(key)").as("dkx"),
-              sum("doc").as("doc"), sum("dnc").as("dnc"))
-            .write.mode("overwrite").parquet(s"$ledgerDir/delta-$batchId")
-          ()
-        }
-      }
-      .start()
+      .where(col("dn") > 0))
+    ledger.stream(newRows, checkpoint) { (batch, batchId) =>
+      val moves = batch.as("b")
+        .join(old.as("o"), col("b.key") === col("o.key"), "left_outer")
+        .select(col("b.key").as("key"), col("o.cents").as("old_cents"),
+          col("b.cents").as("new_cents"))
+        .withColumn("cls",
+          when(col("old_cents").isNull, "added")
+            .when(col("old_cents") =!= col("new_cents"), "changed")
+            .otherwise("unchanged"))
+      // +1 into the landing class; −1 out of 'removed' for keys
+      // the baseline held (XOR cancels the baseline's checksum
+      // contribution, negation cancels its cent total)
+      val pos = moves.select(col("cls").as("diff_class"), lit(1L).as("dn"),
+        col("key"), coalesce(col("old_cents"), lit(0L)).as("doc"),
+        col("new_cents").as("dnc"))
+      val neg = moves.where(col("old_cents").isNotNull)
+        .select(lit("removed").as("diff_class"), lit(-1L).as("dn"),
+          col("key"), (-col("old_cents")).as("doc"), lit(0L).as("dnc"))
+      ledger.write(batchId, pos.unionAll(neg)
+        .groupBy("diff_class")
+        .agg(sum("dn").as("dn"), expr("bit_xor(key)").as("dkx"),
+          sum("doc").as("doc"), sum("dnc").as("dnc")))
+    }
   }
 
   /** The current q60 ledger from a [[diffStream]] directory: fold the
@@ -819,7 +857,8 @@ object StreamingOps {
     * (StreamingSpec pins 1-batch ≡ 3-batch ≡ batch).
     */
   def diffLedger(s: SparkSession, ledgerDir: String): DataFrame =
-    s.read.parquet(s"$ledgerDir/delta-*")
+    new DeltaLedger(ledgerDir)
+      .deltas(s, "diff_class STRING, dn BIGINT, dkx BIGINT, doc BIGINT, dnc BIGINT")
       .groupBy("diff_class")
       .agg(sum("dn").as("n"), expr("bit_xor(dkx)").as("key_checksum"),
         sum("doc").as("old_cents_total"), sum("dnc").as("new_cents_total"))
@@ -827,15 +866,13 @@ object StreamingOps {
       .orderBy("diff_class")
 
   /** e25's STREAMING face, part 1 — maintain the per-(user, hour)
-    * event-count ledger continuously as micro-batches land (the
-    * diffStream ledger discipline): each batch reduces to its own
-    * (user_id, hour_us, cnt) delta, written `delta-<batchId>` with
-    * overwrite — so an at-least-once REPLAY of a batch rewrites the
-    * same file instead of double-counting (idempotent by naming, the
-    * diffStream/c03 contract). Hour counts merge ADDITIVELY across
-    * deltas, which is the whole reason the ledger is count-shaped:
-    * the burst predicate itself (a variance test) is not mergeable,
-    * but its sufficient statistics are.
+    * event-count ledger continuously as micro-batches land: each batch
+    * reduces to its own (user_id, hour_us, cnt) delta in the
+    * [[DeltaLedger]] at `ledgerDir` (its replay and restart contract).
+    * Hour counts merge ADDITIVELY across deltas, which is the whole
+    * reason the ledger is count-shaped: the burst predicate itself (a
+    * variance test) is not mergeable, but its sufficient statistics
+    * are.
     *
     * Scale shape: per batch ONE partial+final count aggregation of
     * the batch's own rows (never the history) and one delta-sized
@@ -844,26 +881,17 @@ object StreamingOps {
     * a base (K1e's compactArchive shape).
     */
   def burstStream(events: Dataset[Event], ledgerDir: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    if (checkpoint.isEmpty) clearNumericDeltas(ledgerDir)
+      checkpoint: Option[String] = None): StreamingQuery = {
     val hourUs = graft.operators.EventWindows.HourUs
-    val writer = checkpoint.foldLeft(events.writeStream)(
-      (w, c) => w.option("checkpointLocation", c))
-    writer
-      .foreachBatch { (batch: Dataset[Event], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch
-            .select(col("user_id"),
-              (unix_micros(col("ts")) - unix_micros(col("ts")) % hourUs)
-                .as("hour_us"))
-            .groupBy("user_id", "hour_us")
-            .agg(count(lit(1)).as("cnt"))
-            .write.mode("overwrite").parquet(s"$ledgerDir/delta-$batchId")
-          ()
-        }
-      }
-      .start()
+    val ledger = new DeltaLedger(ledgerDir)
+    ledger.stream(events, checkpoint) { (batch, batchId) =>
+      ledger.write(batchId, batch
+        .select(col("user_id"),
+          (unix_micros(col("ts")) - unix_micros(col("ts")) % hourUs)
+            .as("hour_us"))
+        .groupBy("user_id", "hour_us")
+        .agg(count(lit(1)).as("cnt")))
+    }
   }
 
   /** e25's STREAMING face, part 2 — the current burst readout from a
@@ -873,34 +901,20 @@ object StreamingOps {
     * BIGINT variance test, never a twin). Once all events have
     * arrived this equals batch e25 row-for-row under ANY batch split
     * (counts are order-independent; StreamingSpec pins 1-batch ≡
-    * 3-batch ≡ batch).
+    * 3-batch ≡ batch). No delta yet → no bursts.
     */
-  def burstLedger(s: SparkSession, ledgerDir: String): DataFrame = {
-    import s.implicits._
-    // a ledger with no delta yet (only empty batches so far) is a
-    // valid state whose readout is "no bursts" — not a path error
-    // (diffStream never hits this: it pre-writes delta-base)
-    val dir = new java.io.File(ledgerDir)
-    val hasDelta = Option(dir.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.matches("delta-\\d+"))
-    val hc =
-      if (!hasDelta)
-        Seq.empty[(Long, Long, Long)].toDF("user_id", "hour_us", "cnt")
-      else
-        s.read.parquet(s"$ledgerDir/delta-*")
-          .groupBy("user_id", "hour_us")
-          .agg(sum("cnt").as("cnt"))
-    graft.operators.EventWindows.burstFlags(hc)
+  def burstLedger(s: SparkSession, ledgerDir: String): DataFrame =
+    graft.operators.EventWindows.burstFlags(new DeltaLedger(ledgerDir)
+        .deltas(s, "user_id BIGINT, hour_us BIGINT, cnt BIGINT")
+        .groupBy("user_id", "hour_us")
+        .agg(sum("cnt").as("cnt")))
       .orderBy("user_id", "hour_us")
-  }
 
-  /** Continuous archiving: the reference's whole purpose (archive
-    * query results to object storage) lifted to a stream — every
-    * micro-batch becomes one archived object
-    * `<table>-<batchId>.<ext>` via [[graft.engine.Engine]], giving
-    * chiv-format output with exactly-once-per-batch semantics from
-    * the checkpoint.
+  /** [[maintainIndex]]'s arrival row — the [[graft.Vec.withNorm]]
+    * projection as a streaming-encodable shape.
     */
+  final case class ArrivalVec(vec_id: Long, label: Int, v: Seq[Double], nrm: Double)
+
   /** s14's STREAMING face: continuous vector-index maintenance — an
     * arrival stream of normed embeddings (the [[graft.Vec.withNorm]]
     * shape: vec_id, label, v, nrm) folds into a bucketed index
@@ -917,52 +931,29 @@ object StreamingOps {
     * Determinism: assignment is per-row and centroids are frozen, so
     * the final table CONTENTS are a pure function of the arrival SET —
     * invariant to micro-batch splits, arrival order, AND replays:
-    * foreachBatch is at-least-once, so each append carries its
-    * batch_id and a replayed id is skipped whole (see the body).
-    * StreamingSpec pins 1-batch ≡ 3-batch ingestion row-for-row, a
-    * replayed batch landing nothing, and per-cell counts against
-    * s14's own batch assignment.
+    * each append carries its batch_id and a replayed id is skipped
+    * whole ([[landed]]). StreamingSpec pins 1-batch ≡ 3-batch
+    * ingestion row-for-row, a replayed batch landing nothing, and
+    * per-cell counts against s14's own batch assignment.
     */
-  /** [[maintainIndex]]'s arrival row — the [[graft.Vec.withNorm]]
-    * projection as a streaming-encodable shape.
-    */
-  final case class ArrivalVec(vec_id: Long, label: Int, v: Seq[Double], nrm: Double)
-
   def maintainIndex(arrivals: DataFrame,
       centroids: Seq[(Long, Array[Double], Double)],
-      tableName: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      tableName: String): StreamingQuery = {
     val buckets = graft.operators.Similarity.ivfBuckets(centroids)
-    arrivals.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the micro-batch runs in a cloned session: the native
-          // kernel must be registered THERE for the argmin call
-          val s = batch.sparkSession
-          graft.functions.GraftFunctions.register(s)
-          // idempotence under foreachBatch's AT-LEAST-ONCE replay: a
-          // crash between the append committing and the offset log
-          // committing makes Spark re-send this batch, and a blind
-          // append would duplicate it permanently (applyChangelog /
-          // archiveStream defend the same contract). Each append
-          // carries its batch_id; a replayed id is skipped WHOLE —
-          // the existence probe is a batch_id = N point filter that
-          // parquet row-group stats prune to near-zero IO at any
-          // index size.
-          val alreadyLanded = s.catalog.tableExists(tableName) &&
-            !s.table(tableName).where(col("batch_id") === batchId).isEmpty
-          if (!alreadyLanded) {
-            batch
-              .withColumn("cell", graft.operators.Similarity.cellOf(centroids))
-              .select(col("vec_id"), col("cell"), col("label"), col("v"),
-                col("nrm"), lit(batchId).as("batch_id"))
-              .write.format("parquet").mode("append")
-              .bucketBy(buckets, "cell").sortBy("cell")
-              .saveAsTable(tableName)
-          }
-          ()
-        }
-      }
-      .start()
+    eachBatch(arrivals) { (batch, batchId) =>
+      // the micro-batch runs in a cloned session: the native
+      // kernel must be registered THERE for the argmin call
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      if (!landed(s, tableName, batchId))
+        batch
+          .withColumn("cell", graft.operators.Similarity.cellOf(centroids))
+          .select(col("vec_id"), col("cell"), col("label"), col("v"),
+            col("nrm"), lit(batchId).as("batch_id"))
+          .write.format("parquet").mode("append")
+          .bucketBy(buckets, "cell").sortBy("cell")
+          .saveAsTable(tableName)
+    }
   }
 
   /** c03: CONTINUOUS CURATION — c01's pipeline shape lifted to the
@@ -976,45 +967,37 @@ object StreamingOps {
     * (4) survivors landed as one chiv-format object per batch
     * (archiveStream's contract) while their fingerprints APPEND to
     * the index so the next batch sees them. Replay-safe under
-    * foreachBatch's at-least-once contract (the maintainIndex
-    * discipline): index appends carry batch_id and a replayed batch
-    * is skipped whole; landing runs BEFORE the index append and its
-    * object key derives from the batch id, so the only replayable
-    * window re-writes the same object rather than duplicating rows.
-    * At 100 TB the per-batch cost is the batch × index bucket-local
-    * anti join plus a narrow append — the index is never rewritten.
+    * foreachBatch's at-least-once contract: index appends carry
+    * batch_id and a replayed batch is skipped whole ([[landed]]);
+    * landing runs BEFORE the index append and its object key derives
+    * from the batch id, so the only replayable window re-writes the
+    * same object rather than duplicating rows. At 100 TB the
+    * per-batch cost is the batch × index bucket-local anti join plus
+    * a narrow append — the index is never rewritten.
     */
   def curateStream(docs: DataFrame, engine: graft.engine.Engine,
-      indexTable: String, destDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val gated = graft.operators.TextAnalysis.qualityScored(batch)
-            .where(col("quality") =!= "low")
-            .select(col("doc_id"), col("text"))
-          val inBatch = gated.groupBy("text").agg(min("doc_id").as("doc_id"))
-          val idxExists = s.catalog.tableExists(indexTable)
-          val alreadyLanded = idxExists &&
-            !s.table(indexTable).where(col("batch_id") === batchId).isEmpty
-          if (!alreadyLanded) {
-            val novel = (if (idxExists)
-                inBatch.join(s.table(indexTable), Seq("text"), "left_anti")
-              else inBatch)
-              .select(col("doc_id"), col("text"))
-              .cache()
-            if (!novel.isEmpty) {
-              engine.archiveDF(novel, destDir, s"docs-$batchId", _.copy(key = None))
-              novel.select(col("text"), col("doc_id"), lit(batchId).as("batch_id"))
-                .write.format("parquet").mode("append")
-                .bucketBy(8, "text").saveAsTable(indexTable)
-            }
-            novel.unpersist(blocking = false)
-          }
-          ()
+      indexTable: String, destDir: String): StreamingQuery =
+    eachBatch(docs) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val gated = graft.operators.TextAnalysis.qualityScored(batch)
+        .where(col("quality") =!= "low")
+        .select(col("doc_id"), col("text"))
+      val inBatch = gated.groupBy("text").agg(min("doc_id").as("doc_id"))
+      if (!landed(s, indexTable, batchId)) {
+        val novel = (if (s.catalog.tableExists(indexTable))
+            inBatch.join(s.table(indexTable), Seq("text"), "left_anti")
+          else inBatch)
+          .select(col("doc_id"), col("text"))
+          .cache()
+        if (!novel.isEmpty) {
+          engine.archiveDF(novel, destDir, s"docs-$batchId", _.copy(key = None))
+          novel.select(col("text"), col("doc_id"), lit(batchId).as("batch_id"))
+            .write.format("parquet").mode("append")
+            .bucketBy(8, "text").saveAsTable(indexTable)
         }
+        novel.unpersist(blocking = false)
       }
-      .start()
+    }
 
   /** c05's STREAMING face, part 1 — maintain the corpus DATA CARD
     * continuously as document micro-batches land. Per batch: the
@@ -1023,11 +1006,10 @@ object StreamingOps {
     * classification against a PERSISTENT bucketed text index (the
     * d09/curateStream discipline: a text already indexed is a dup of
     * an earlier arrival; within the batch the min id keeps), then ONE
-    * per-language sufficient-statistics delta written
-    * `delta-<batchId>` with overwrite (the burstStream/diffStream
-    * ledger discipline — every card measure is an additive count, so
+    * per-language sufficient-statistics delta in the [[DeltaLedger]]
+    * at `ledgerDir` (every card measure is an additive count, so
     * deltas merge) and the batch's novel texts APPENDED to the index
-    * batch_id-guarded.
+    * batch_id-guarded ([[landed]]).
     *
     * Replay safety (at-least-once foreachBatch): the delta write
     * precedes the index append — a replay after a crash BETWEEN them
@@ -1043,59 +1025,47 @@ object StreamingOps {
     * (StreamingSpec pins 1-batch ≡ 3-batch ≡ batch c05).
     */
   def dataCardStream(docs: DataFrame, indexTable: String, ledgerDir: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    if (checkpoint.isEmpty) clearNumericDeltas(ledgerDir)
-    val writer = checkpoint.foldLeft(docs.writeStream)(
-      (w, c) => w.option("checkpointLocation", c))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val idxExists = s.catalog.tableExists(indexTable)
-          val alreadyApplied = idxExists &&
-            !s.table(indexTable).where(col("batch_id") === batchId).isEmpty
-          if (!alreadyApplied) {
-            val scored = graft.operators.TextAnalysis.langidScoredDf(
-                graft.operators.TextAnalysis.qualityScored(batch))
-              .select(col("doc_id"), col("text"), col("pred_lang"),
-                col("n_chars"), col("n_tokens"), col("quality"))
-              .cache()
-            val keep = scored.groupBy("text").agg(min("doc_id").as("keep_id"))
-            val seen =
-              if (idxExists)
-                s.table(indexTable).select(col("text")).distinct()
-                  .withColumn("seen", lit(true))
-              else scored.limit(0).select(col("text"), lit(true).as("seen"))
-            val flagged = scored.join(keep, Seq("text"))
-              .join(seen, Seq("text"), "left")
-              .withColumn("is_dup",
-                when(col("seen").isNotNull || col("doc_id") =!= col("keep_id"), 1L)
-                  .otherwise(0L))
-            flagged
-              .groupBy("pred_lang")
-              .agg(count(lit(1)).as("n_docs"),
-                sum("n_tokens").as("n_tokens"),
-                sum("n_chars").as("n_chars"),
-                sum(when(col("quality") === "high", 1L).otherwise(0L)).as("n_high"),
-                sum(when(col("quality") === "medium", 1L).otherwise(0L)).as("n_medium"),
-                sum(when(col("quality") === "low", 1L).otherwise(0L)).as("n_low"),
-                sum("is_dup").as("n_dup"))
-              .write.mode("overwrite").parquet(s"$ledgerDir/delta-$batchId")
-            // novel texts (in-batch keepers not previously indexed)
-            // enter the index so the NEXT batch sees them
-            val novel = flagged
-              .where(col("seen").isNull && col("doc_id") === col("keep_id"))
-              .select(col("text"), col("doc_id"), lit(batchId).as("batch_id"))
-            if (!novel.isEmpty)
-              novel.write.format("parquet").mode("append")
-                .bucketBy(8, "text").saveAsTable(indexTable)
-            scored.unpersist(blocking = false)
-          }
-          ()
-        }
+      checkpoint: Option[String] = None): StreamingQuery = {
+    val ledger = new DeltaLedger(ledgerDir)
+    ledger.stream(docs, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      if (!landed(s, indexTable, batchId)) {
+        val scored = graft.operators.TextAnalysis.langidScoredDf(
+            graft.operators.TextAnalysis.qualityScored(batch))
+          .select(col("doc_id"), col("text"), col("pred_lang"),
+            col("n_chars"), col("n_tokens"), col("quality"))
+          .cache()
+        val keep = scored.groupBy("text").agg(min("doc_id").as("keep_id"))
+        val seen =
+          if (s.catalog.tableExists(indexTable))
+            s.table(indexTable).select(col("text")).distinct()
+              .withColumn("seen", lit(true))
+          else scored.limit(0).select(col("text"), lit(true).as("seen"))
+        val flagged = scored.join(keep, Seq("text"))
+          .join(seen, Seq("text"), "left")
+          .withColumn("is_dup",
+            when(col("seen").isNotNull || col("doc_id") =!= col("keep_id"), 1L)
+              .otherwise(0L))
+        ledger.write(batchId, flagged
+          .groupBy("pred_lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum("n_tokens").as("n_tokens"),
+            sum("n_chars").as("n_chars"),
+            sum(when(col("quality") === "high", 1L).otherwise(0L)).as("n_high"),
+            sum(when(col("quality") === "medium", 1L).otherwise(0L)).as("n_medium"),
+            sum(when(col("quality") === "low", 1L).otherwise(0L)).as("n_low"),
+            sum("is_dup").as("n_dup")))
+        // novel texts (in-batch keepers not previously indexed)
+        // enter the index so the NEXT batch sees them
+        val novel = flagged
+          .where(col("seen").isNull && col("doc_id") === col("keep_id"))
+          .select(col("text"), col("doc_id"), lit(batchId).as("batch_id"))
+        if (!novel.isEmpty)
+          novel.write.format("parquet").mode("append")
+            .bucketBy(8, "text").saveAsTable(indexTable)
+        scored.unpersist(blocking = false)
       }
-      .start()
+    }
   }
 
   /** c05's STREAMING face, part 2 — the current data card from a
@@ -1103,56 +1073,38 @@ object StreamingOps {
     * per language and emit batch c05's exact readout (dup_rate as the
     * same guarded single division). Empty ledger → empty card.
     */
-  def dataCardLedger(s: SparkSession, ledgerDir: String): DataFrame = {
-    import s.implicits._
-    val dir = new java.io.File(ledgerDir)
-    val hasDelta = Option(dir.listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.matches("delta-\\d+"))
-    val folded =
-      if (!hasDelta)
-        Seq.empty[(String, Long, Long, Long, Long, Long, Long, Long)]
-          .toDF("pred_lang", "n_docs", "n_tokens", "n_chars",
-            "n_high", "n_medium", "n_low", "n_dup")
-      else
-        s.read.parquet(s"$ledgerDir/delta-*")
-          .groupBy("pred_lang")
-          .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-            sum("n_chars").as("n_chars"), sum("n_high").as("n_high"),
-            sum("n_medium").as("n_medium"), sum("n_low").as("n_low"),
-            sum("n_dup").as("n_dup"))
-    folded
+  def dataCardLedger(s: SparkSession, ledgerDir: String): DataFrame =
+    new DeltaLedger(ledgerDir)
+      .deltas(s, "pred_lang STRING, n_docs BIGINT, n_tokens BIGINT, n_chars BIGINT, " +
+        "n_high BIGINT, n_medium BIGINT, n_low BIGINT, n_dup BIGINT")
+      .groupBy("pred_lang")
+      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
+        sum("n_chars").as("n_chars"), sum("n_high").as("n_high"),
+        sum("n_medium").as("n_medium"), sum("n_low").as("n_low"),
+        sum("n_dup").as("n_dup"))
       .select(col("pred_lang"), col("n_docs"), col("n_tokens"), col("n_chars"),
         col("n_high"), col("n_medium"), col("n_low"), col("n_dup"),
         (col("n_dup").cast("double") / col("n_docs")).as("dup_rate"))
       .orderBy("pred_lang")
-  }
 
   /** c06's STREAMING face, part 1 — the INDEX LIFECYCLE as a stream:
-    * the BASE index's per-cell ledger lands ONCE as `delta-base`
-    * (overwrite — a restart re-derives identical rows); each
+    * the BASE index's per-cell ledger lands ONCE as `delta-base`; each
     * micro-batch of ARRIVALS is assigned its cell under the FROZEN
     * centroids (s14's incremental-insert rule — the caller passes the
     * trained centroid literals, so training never reruns per batch)
     * and folds ADDITIVELY into the occupancy ledger with s23's
     * tombstone verdict (vec_id ≡ 0 mod 9) applied per row. Every c06
     * measure is additive — counts and an id-sum checksum — which is
-    * exactly what makes the lifecycle streamable as a delta ledger
-    * (the diffStream discipline): no per-cell state store, just one
-    * grouped SUM per batch, replay-safe via idempotent
-    * `delta-<batchId>` overwrite naming. [[lifecycleLedger]] folds
-    * base + deltas back into batch c06's per-cell rows
+    * exactly what makes the lifecycle streamable as a
+    * [[DeltaLedger]] (its replay and restart contract): no per-cell
+    * state store, just one grouped SUM per batch. [[lifecycleLedger]]
+    * folds base + deltas back into batch c06's per-cell rows
     * (StreamingSpec pins 1-batch ≡ 3-batch ≡ batch c06).
-    *
-    * Restart contract: same as diffStream — pass `checkpoint` to
-    * resume batch numbering; without one, setup deletes the dead
-    * run's numeric deltas (never `delta-base`).
     */
   def lifecycleStream(arrivals: DataFrame, base: DataFrame,
       centroids: Seq[(Long, Array[Double], Double)], ledgerDir: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: Option[String] = None): StreamingQuery = {
     require(centroids.nonEmpty, "graft: lifecycleStream needs trained centroids")
-    if (checkpoint.isEmpty) clearNumericDeltas(ledgerDir)
     def cellLedger(rows: DataFrame, arrived: Boolean): DataFrame =
       rows.withColumn("cell", graft.operators.Similarity.cellOf(centroids))
         .groupBy("cell")
@@ -1163,19 +1115,11 @@ object StreamingOps {
           sum(when(col("vec_id") % 9 =!= 0, 1L).otherwise(0L)).as("n_live"),
           sum(when(col("vec_id") % 9 =!= 0, col("vec_id")).otherwise(0L))
             .as("live_checksum"))
-    cellLedger(base, arrived = false)
-      .write.mode("overwrite").parquet(s"$ledgerDir/delta-base")
-    val writer = checkpoint.foldLeft(arrivals.writeStream)(
-      (w, c) => w.option("checkpointLocation", c))
-    writer
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          cellLedger(batch, arrived = true)
-            .write.mode("overwrite").parquet(s"$ledgerDir/delta-$batchId")
-          ()
-        }
-      }
-      .start()
+    val ledger = new DeltaLedger(ledgerDir)
+    ledger.write("base", cellLedger(base, arrived = false))
+    ledger.stream(arrivals, checkpoint) { (batch, batchId) =>
+      ledger.write(batchId, cellLedger(batch, arrived = true))
+    }
   }
 
   /** c06's STREAMING face, part 2 — the current lifecycle ledger from
@@ -1184,23 +1128,28 @@ object StreamingOps {
     * c06's exact per-cell output shape.
     */
   def lifecycleLedger(s: SparkSession, ledgerDir: String): DataFrame =
-    s.read.parquet(s"$ledgerDir/delta-*")
+    new DeltaLedger(ledgerDir)
+      .deltas(s, "cell BIGINT, n_base BIGINT, n_arrived BIGINT, n_tombstoned BIGINT, " +
+        "n_live BIGINT, live_checksum BIGINT")
       .groupBy("cell")
       .agg(sum("n_base").as("n_base"), sum("n_arrived").as("n_arrived"),
         sum("n_tombstoned").as("n_tombstoned"), sum("n_live").as("n_live"),
         sum("live_checksum").as("live_checksum"))
       .orderBy("cell")
 
+  /** Continuous archiving: the reference's whole purpose (archive
+    * query results to object storage) lifted to a stream — every
+    * micro-batch becomes one archived object
+    * `<table>-<batchId>.<ext>` via [[graft.engine.Engine]], giving
+    * chiv-format output with exactly-once-per-batch semantics from
+    * the checkpoint.
+    */
   def archiveStream(events: DataFrame, engine: graft.engine.Engine,
-      destDir: String, table: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // clear any fixed key from the engine's base config — a fixed
-          // key would make every batch overwrite the same object
-          engine.archiveDF(batch, destDir, s"$table-$batchId", _.copy(key = None))
-          ()
-        }
-      }
-      .start()
+      destDir: String, table: String): StreamingQuery =
+    eachBatch(events) { (batch, batchId) =>
+      // clear any fixed key from the engine's base config — a fixed
+      // key would make every batch overwrite the same object
+      engine.archiveDF(batch, destDir, s"$table-$batchId", _.copy(key = None))
+      ()
+    }
 }

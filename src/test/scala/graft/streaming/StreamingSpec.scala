@@ -1033,4 +1033,154 @@ class StreamingSpec extends SparkSpec {
       "a replayed batch id must not duplicate index rows")
     assert(spark.table("graft_stream_idx_one").count() == arrivals.size)
   }
+
+  // ---- ledger and snapshot dirs given as Hadoop FileSystem URIs ----
+
+  private val sf = s"${sys.props("user.home")}/testdata/sf0.001"
+
+  private def thirds[A](xs: Seq[A]): Seq[Seq[A]] = {
+    val n = xs.length
+    assert(n >= 3)
+    Seq(xs.slice(0, n / 3), xs.slice(n / 3, 2 * n / 3), xs.slice(2 * n / 3, n))
+  }
+
+  /** The `delta-*` entries of a ledger on the local disk. */
+  private def deltaNames(localDir: String): Set[String] =
+    Option(new java.io.File(localDir).list()).toSeq.flatten
+      .filter(_.startsWith("delta-")).toSet
+
+  /** Batch e25 and the events it reads, as burstStream arrivals. */
+  private def burstCase(): (Seq[Seq[Any]], Seq[Event]) = {
+    import org.apache.spark.sql.functions.col
+    val expect = graft.operators.EventWindows.e25.fn(spark, sf)
+      .collect().map(_.toSeq).toSeq
+    assert(expect.nonEmpty, "batch e25 found no bursts — corpus degenerate")
+    val evs = graft.Tables.events(spark, sf)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+        col("value"))
+      .collect()
+      .map(r => Event(r.getLong(0), r.getTimestamp(1), r.getLong(2),
+        r.getString(3), r.getDouble(4)))
+      .toSeq
+    (expect, evs)
+  }
+
+  /** burstStream over `splits` into `ledger`, then its readout. */
+  private def burstRun(ledger: String, splits: Seq[Seq[Event]]): Seq[Seq[Any]] = {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val input = MemoryStream[Event]
+    val q = StreamingOps.burstStream(input.toDS(), ledger)
+    try splits.foreach { s => input.addData(s: _*); q.processAllAvailable() }
+    finally q.stop()
+    StreamingOps.burstLedger(spark, ledger).collect().map(_.toSeq).toSeq
+  }
+
+  /** The applyChangelog test's two batches against `dir`: upsert with
+    * an in-batch update, then update/delete/insert.
+    */
+  private def checkChangelog(dir: String): Unit = {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val input = MemoryStream[(Long, Long, String, Double)]
+    val q = StreamingOps.applyChangelog(
+      input.toDS().toDF("key", "seq", "op", "value"), dir)
+    def snapshot = spark.read.parquet(dir).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    try {
+      input.addData((10L, 1L, "U", 1.0), (10L, 2L, "U", 1.5), (20L, 1L, "U", 2.0), (30L, 1L, "U", 3.0))
+      q.processAllAvailable()
+      assert(snapshot == Map(10L -> 1.5, 20L -> 2.0, 30L -> 3.0))
+      input.addData((10L, 3L, "U", 9.0), (20L, 3L, "D", 0.0), (40L, 1L, "U", 4.0))
+      q.processAllAvailable()
+      assert(snapshot == Map(10L -> 9.0, 30L -> 3.0, 40L -> 4.0))
+    } finally q.stop()
+  }
+
+  test("file: URIs: burst ledger, its un-checkpointed restart and the changelog snapshot") {
+    val (expect, evs) = burstCase()
+    val ledger = "file:" + java.nio.file.Files.createTempDirectory("graft-burst-uri") + "/ledger"
+    assert(burstRun(ledger, thirds(evs)) == expect,
+      "3-batch burst ledger under a file: URI diverges from batch e25")
+    // restart without a checkpoint: batch ids start over, so the dead
+    // run's delta-1/delta-2 must go rather than double-count
+    assert(burstRun(ledger, Seq(evs)) == expect,
+      "restart over a stale file: URI ledger must re-derive, not double-count")
+    checkChangelog("file:" + java.nio.file.Files.createTempDirectory("graft-cdc-uri") + "/snap")
+  }
+
+  test("diffStream and applyChangelog run on a non-file: Hadoop FileSystem") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    implicit val sql = spark.sqlContext
+    val expect = graft.operators.Relational.q60.fn(spark, sf)
+      .collect().map(_.toSeq).toSeq
+    def snap(missMod: Long, missRes: Long) = graft.Tables.orders(spark, sf)
+      .filter(col("o_orderkey") % missMod =!= missRes)
+      .select(col("o_orderkey").as("key"),
+        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+    val oldS = snap(89L, 3L)
+    val newRows = snap(97L, 5L)
+      .select(col("key"),
+        (col("cents") + when(col("key") % 11 === 0, 100L).otherwise(0L))
+          .as("cents"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.ledgerfs.impl", classOf[LedgerFileSystem].getName)
+    try {
+      val local = java.nio.file.Files.createTempDirectory("graft-ledgerfs").toString
+      val ledger = s"ledgerfs://$local/ledger"
+      def run(splits: Seq[Seq[(Long, Long)]]): Seq[Seq[Any]] = {
+        val input = MemoryStream[(Long, Long)]
+        val q = StreamingOps.diffStream(
+          input.toDS().toDF("key", "cents"), oldS, ledger)
+        try splits.foreach { s => input.addData(s); q.processAllAvailable() }
+        finally q.stop()
+        StreamingOps.diffLedger(spark, ledger).collect().map(_.toSeq).toSeq
+      }
+      assert(run(thirds(newRows)) == expect, "3-batch ledger on ledgerfs diverges from batch q60")
+      assert(deltaNames(s"$local/ledger") ==
+        Set("delta-base", "delta-0", "delta-1", "delta-2"))
+      // the restart guard deletes the numeric deltas only
+      assert(run(Seq(newRows)) == expect,
+        "restart over a stale ledgerfs ledger must re-derive, not double-count")
+      assert(deltaNames(s"$local/ledger") == Set("delta-base", "delta-0"))
+      checkChangelog(s"ledgerfs://$local/snap")
+    } finally conf.unset("fs.ledgerfs.impl")
+  }
+
+  test("burstStream's checkpointed restart keeps the prior run's deltas and folds to e25") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val (expect, evs) = burstCase()
+    val root = java.nio.file.Files.createTempDirectory("graft-burst-ckpt").toString
+    val ledger = s"$root/ledger"
+    val checkpoint = Some(s"$root/checkpoint")
+    val Seq(a, b, c) = thirds(evs)
+    // one source across both runs, so the restart resumes its offsets
+    val input = MemoryStream[Event]
+    val q1 = StreamingOps.burstStream(input.toDS(), ledger, checkpoint)
+    try Seq(a, b).foreach { s => input.addData(s: _*); q1.processAllAvailable() }
+    finally q1.stop()
+    assert(deltaNames(ledger) == Set("delta-0", "delta-1"))
+    val q2 = StreamingOps.burstStream(input.toDS(), ledger, checkpoint)
+    try {
+      assert(deltaNames(ledger) == Set("delta-0", "delta-1"),
+        "a checkpointed restart must keep the prior run's deltas")
+      input.addData(c: _*)
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(deltaNames(ledger) == Set("delta-0", "delta-1", "delta-2"),
+      "batch ids must continue from the checkpoint")
+    assert(StreamingOps.burstLedger(spark, ledger).collect().map(_.toSeq).toSeq == expect,
+      "checkpointed 2 + 1 batch burst ledger diverges from batch e25")
+  }
+}
+
+/** The local filesystem under the `ledgerfs:` scheme: a Hadoop
+  * FileSystem that is not `file:`, so a sink that reaches its
+  * directory any other way fails.
+  */
+class LedgerFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("ledgerfs:///")
 }
